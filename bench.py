@@ -14,47 +14,12 @@ import time
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import SparkSession
     from datavault4dbt_spark import fixtures
-    from datavault4dbt_spark.context import configure_session_builder
 
-    spark = configure_session_builder(
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dv4dbt-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false"),
-        local_bench=True,
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM paths shared by every query (scheduler, codegen,
-    # parquet reader, shuffle, window, noop sink) so per-query numbers
-    # measure the plan, not first-use JIT: run the smallest real stage
-    fixtures.entity_query("stage_nation")(spark, sf_dir) \
-        .write.format("noop").mode("overwrite").save()
-    # warm every table's parquet footer (schema inference reads the
-    # footer on the driver) so no query pays a cold metadata read
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-    # warm the higher-order-function eval path (cosine/ANN fold lambdas)
-    spark.range(256).selectExpr(
-        "aggregate(zip_with(array(cast(id AS DOUBLE)), array(2.0d), "
-        "(x, y) -> x * y), cast(0.0 AS DOUBLE), (acc, v) -> acc + v) s") \
-        .write.format("noop").mode("overwrite").save()
-    # prefork the Python worker pool (Arrow mapInPandas path): worker
-    # daemon + per-core fork costs seconds on first use and the workers
-    # are reused afterwards (spark.python.worker.reuse defaults true) —
-    # session infrastructure, same category as the JIT warmups above
-    spark.range(int(cpus) * 4).repartition(int(cpus)) \
-        .mapInPandas(lambda it: it, "id bigint") \
-        .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+    spark = build_session()
+    warmup(spark, sf_dir)
 
     # Per-query time = MIN over `trials` runs. The container shares its
     # host with other tenants and single-shot timings swing 3-10x under
@@ -274,6 +239,65 @@ def main():
     assert len(headline) <= 1900, len(headline)
     print(headline)
     spark.stop()
+
+
+def build_session():
+    """The bench session on $SPARK_GRAFT_CPUS local cores: the engine's
+    confs plus three size settings tuned for CPU-heavy hashing over
+    small-ish inputs (finer scan splits and finer AQE coalescing keep
+    all local cores busy). A cluster at 100 TB keeps Spark's defaults
+    (128m/64m). Shared by the tools/ harnesses."""
+    from pyspark.sql import SparkSession
+    from datavault4dbt_spark.context import configure_session_builder
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
+    spark = configure_session_builder(
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("dv4dbt-spark-bench")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.driver.memory", "16g")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.files.maxPartitionBytes", "16m")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+        # keep AQE from coalescing small-but-fanning-out shuffles to 1
+        # task (a 1.5 MB hub shuffle feeds a 31x snapshot cross join in
+        # PIT: coalescing it serializes the whole downstream pipeline)
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "64k"),
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warmup(spark, sf_dir: str):
+    """Warm the JVM paths shared by every query so per-query numbers
+    measure the plan, not first-use JIT."""
+    from datavault4dbt_spark import fixtures
+
+    # scheduler, codegen, parquet reader, shuffle, window, noop sink:
+    # run the smallest real stage
+    fixtures.entity_query("stage_nation")(spark, sf_dir) \
+        .write.format("noop").mode("overwrite").save()
+    # warm every table's parquet footer (schema inference reads the
+    # footer on the driver) so no query pays a cold metadata read
+    for t in ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"):
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
+    # warm the higher-order-function eval path (cosine/ANN fold lambdas)
+    spark.range(256).selectExpr(
+        "aggregate(zip_with(array(cast(id AS DOUBLE)), array(2.0d), "
+        "(x, y) -> x * y), cast(0.0 AS DOUBLE), (acc, v) -> acc + v) s") \
+        .write.format("noop").mode("overwrite").save()
+    # prefork the Python worker pool (Arrow mapInPandas path): worker
+    # daemon + per-core fork costs seconds on first use and the workers
+    # are reused afterwards (spark.python.worker.reuse defaults true) —
+    # session infrastructure, same category as the JIT warmups above
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 4).repartition(cpus) \
+        .mapInPandas(lambda it: it, "id bigint") \
+        .write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

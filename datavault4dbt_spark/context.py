@@ -5,6 +5,26 @@ dbt_project.yml:17-85) — technical column aliases, hash settings,
 ghost-record sentinels, replacement tokens — as one frozen dataclass,
 and replaces dbt's ``ref()``/``source()`` resolution with an explicit
 model registry (name -> DataFrame / DuckDB relation name).
+
+Execution tuning is left to Spark (AQE, plan statistics) and to the
+size witnesses the engine measures itself; the engine reads exactly
+one session conf of its own:
+
+=========================================  ==================================
+Setting                                    Why a deployment sets it
+=========================================  ==================================
+``spark.dv4dbt.stream.shufflePartitions``  AQE cannot size state-store
+                                           partitions inside stateful
+                                           micro-batches, so a cluster sets
+                                           the state layout up front (e.g.
+                                           2000 at 1000 executors; default
+                                           4, or 16 for the
+                                           ``applyInPandasWithState`` gates)
+=========================================  ==================================
+
+``tests/test_conf_surface.py`` holds this table to the code: a new
+``spark.dv4dbt.*`` key or environment read fails it until documented
+here.
 """
 
 from __future__ import annotations
@@ -295,7 +315,7 @@ class Registry:
 # own stat, which changes whenever files are added/replaced.
 _PARQUET_SCHEMAS: dict = {}
 
-# (shuffle-partition conf, analyzed-plan semanticHash, target) ->
+# (shuffle-partition conf, analyzed-plan semanticHash) ->
 # scan partition count per session, memoizing the plan->RDD probe in
 # ensure_min_parallelism. Held in a WeakKeyDictionary keyed on the
 # SparkSession object (r12 advice: id(spark) can be reused after GC,
@@ -351,32 +371,21 @@ def testdata_registry(sf_dir: str) -> Registry:
     return reg
 
 
-def configure_session_builder(builder, local_bench: bool = False):
-    """Session options the engine relies on (UTC, AQE, nanos handling).
-
-    ``local_bench=True`` adds two size knobs tuned for CPU-heavy hashing
-    over small-ish inputs (finer scan splits + finer AQE coalescing keep
-    all local cores busy). Production clusters at 100 TB should keep
-    Spark's defaults (128m/64m), so they are opt-in.
-    """
-    builder = (builder
-               .config("spark.sql.session.timeZone", "UTC")
-               .config("spark.sql.adaptive.enabled", "true")
-               .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
-    if local_bench:
-        builder = (builder
-                   .config("spark.sql.files.maxPartitionBytes", "16m")
-                   .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-                   # keep AQE from coalescing small-but-fanning-out
-                   # shuffles to 1 task (a 1.5 MB hub shuffle feeds a
-                   # 31x snapshot cross join in PIT: coalescing it
-                   # serializes the whole downstream pipeline)
-                   .config("spark.sql.adaptive.coalescePartitions"
-                           ".minPartitionSize", "64k"))
-    return builder
+def configure_session_builder(builder):
+    """Session options the engine relies on (UTC, AQE, nanos handling)."""
+    return (builder
+            .config("spark.sql.session.timeZone", "UTC")
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 
 
-def ensure_min_parallelism(df, factor: int = 1):
+# Estimated input bytes below which ensure_min_parallelism skips the
+# repartition: the serial CPU work costs less than the round-robin
+# exchange itself.
+MIN_PARALLELISM_BYTES = 1024 * 1024
+
+
+def ensure_min_parallelism(df):
     """Round-robin repartition IFF the plan's scan parallelism is below
     the session's core count.
 
@@ -387,42 +396,26 @@ def ensure_min_parallelism(df, factor: int = 1):
     groups and this is a no-op (npart >= cores); locally it corrects the
     single-row-group testdata artifact for ~1.7s of shuffle.
 
-    Disable (e.g. on a real cluster, to skip the per-build plan->RDD
-    analysis this probe costs) with
-    ``spark.conf.set("spark.dv4dbt.minParallelism.enabled", "false")``.
     Streaming DataFrames are returned unchanged (no RDD to probe;
     micro-batches re-enter here as batch frames via foreachBatch).
 
-    Size gate: below ``spark.dv4dbt.minParallelism.minBytes`` (default
-    1 MiB) of estimated input the serial CPU work costs less than the
-    round-robin exchange itself, so the repartition is skipped. The
-    estimate comes from catalyst plan stats (driver-side leaf-file
-    bytes) and is checked BEFORE the much costlier plan->RDD partition
-    probe, so small-source builds pay neither.
+    Size gate: below ``MIN_PARALLELISM_BYTES`` of estimated input the
+    repartition is skipped. The estimate comes from catalyst plan stats
+    (driver-side leaf-file bytes) and is checked BEFORE the much
+    costlier plan->RDD partition probe, so small-source builds pay
+    neither.
     """
     if df.isStreaming:
         return df
     spark = df.sparkSession
     try:
-        enabled = spark.conf.get("spark.dv4dbt.minParallelism.enabled", "true")
+        size = int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes().toString())
+        if size < MIN_PARALLELISM_BYTES:
+            return df
     except Exception:
-        enabled = "true"
-    if str(enabled).lower() == "false":
-        return df
-    try:
-        min_bytes = int(spark.conf.get(
-            "spark.dv4dbt.minParallelism.minBytes", str(1024 * 1024)))
-    except Exception:
-        min_bytes = 1024 * 1024
-    if min_bytes > 0:
-        try:
-            size = int(df._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes().toString())
-            if size < min_bytes:
-                return df
-        except Exception:
-            pass  # stats unavailable -> fall through to the RDD probe
-    target = spark.sparkContext.defaultParallelism * factor
+        pass  # stats unavailable -> fall through to the RDD probe
+    target = spark.sparkContext.defaultParallelism
     # The plan->RDD conversion behind .rdd is pure driver latency
     # (~100-300 ms per build) and its partition count is a
     # deterministic function of (plan, session confs): memoize it per
@@ -433,8 +426,8 @@ def ensure_min_parallelism(df, factor: int = 1):
             spark.conf.get("spark.sql.shuffle.partitions"),
             spark.conf.get("spark.sql.files.maxPartitionBytes", None))
         per_session = _RDD_NPART_CACHE.setdefault(spark, {})
-        key = (layout_confs, df._jdf.queryExecution().analyzed()
-               .semanticHash(), target)
+        key = (layout_confs,
+               df._jdf.queryExecution().analyzed().semanticHash())
         npart = per_session.get(key)
         if npart is None:
             npart = df.rdd.getNumPartitions()

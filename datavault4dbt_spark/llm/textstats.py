@@ -19,7 +19,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..context import GlobalConfig, DEFAULT, Registry, ensure_min_parallelism
+from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
 from .textprep import (spark_tokens, duck_tokens, spark_shingles,
                        duck_shingles)

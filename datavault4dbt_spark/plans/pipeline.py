@@ -197,13 +197,18 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             # persist the delta (bounded: records_to_insert, not the
             # table) so the plan executes once, not twice
             new = new.persist()
-            n = new.count()
-        if target is not None and d.materialize == "table":
-            store.overwrite(name, new)
-        else:
-            store.append(name, new)
-        if count_rows:
-            new.unpersist()
+        try:
+            if count_rows:
+                n = new.count()
+            if target is not None and d.materialize == "table":
+                store.overwrite(name, new)
+            else:
+                store.append(name, new)
+        finally:
+            if count_rows:
+                # a failed count/write must not leave the delta cached
+                # for the rest of the session
+                new.unpersist()
         counts[name] = n
         # downstream entities read the STORED table, not the plan
         # (_invalidate also unpersists any cached copy of the old plan);

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..operators.bundle import (BundleMember, BundleConfig, bundle_oracle,
-                                _member_exprs)
+                                _member_exprs, split_small_union)
 from ..plans.sqlbuild import SqlBuilder
 from .incremental import ParquetStore, hwm_probe_scope, scratch_store
 
@@ -81,8 +81,7 @@ def _probe_keys(mcfg) -> tuple:
 
 
 def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
-               index: dict, stage_names, snapshot_names=(),
-               max_workers: int = 4) -> DataFrame:
+               index: dict, stage_names, snapshot_names=()) -> DataFrame:
     """``index``: fixtures' name -> (cfg, builder, oracle, deps);
     ``stage_names``: entities whose phase-1 output is ldts-truncated;
     ``snapshot_names``: snapshot spines whose phase-1 output is
@@ -195,7 +194,7 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
     from concurrent.futures import ThreadPoolExecutor
 
     targets: dict = {}
-    workers = min(max_workers, len(cfg.members))
+    workers = min(4, len(cfg.members))
 
     def write_phase(plans: dict):
         """plans: entity -> initial-load DataFrame. One tagged-union
@@ -241,25 +240,6 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
         return m.entity, bld(spark, reg, mcfg, g,
                              target=targets[m.entity])
 
-    import os as _os, time as _time
-    _dbg = _os.environ.get("SPARK_DV4DBT_REPLAY_TIMING")
-    _t = _time.time()
-
-    def _mark(label):
-        nonlocal _t
-        if _dbg:
-            now = _time.time()
-            print(f"REPLAY-PHASE {label}: {now - _t:.2f}s", flush=True)
-            _t = now
-
-    def _materialize_flag() -> bool:
-        try:
-            flag = str(spark.conf.get(
-                "spark.dv4dbt.replay.materializeShared", "true"))
-        except Exception:
-            flag = "true"
-        return flag.lower() != "false"
-
     # Materialize the persisted shared subtrees ONCE, fully, before the
     # phase-1 union write. ``persist()`` is lazy and Spark's cache does
     # not dedupe IN-FLIGHT computation: the union write job's member
@@ -284,8 +264,7 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
     # Registry.load's per-name build locks keep each subtree built
     # exactly once whichever side requests it first; the futures
     # barrier before write_phase preserves the invariant that nothing
-    # is still in flight when the union write starts. Disable with
-    # spark.dv4dbt.replay.materializeShared=false.
+    # is still in flight when the union write starts.
     shared_names = sorted(
         n for n in walked
         if n in reg.spark_loaders and n in reg.persist_names)
@@ -294,7 +273,7 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
 
     try:
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            if _materialize_flag() and shared_names:
+            if shared_names:
                 mat_pool = ThreadPoolExecutor(
                     max_workers=min(8, len(shared_names)))
                 mat_futs = [
@@ -302,15 +281,11 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
                         lambda n=n: reg.load(spark, n).count())
                     for n in shared_names]
             plans = dict(pool.map(initial, cfg.members))
-            _mark("initial-construct")
             for f in mat_futs:
                 f.result()
-            _mark("materialize-shared")
             write_phase(plans)
-            _mark("phase1-write")
             targets = {m.entity: read_slice(m.entity)
                        for m in cfg.members}
-            _mark("read-slices")
             # HWM/probe literals are baked into the phase-2 plans at
             # CONSTRUCTION time (hwm_filter/max_ldts collect-or-cache,
             # then inject), so the plans stay valid after the scope
@@ -321,9 +296,7 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
                     targets,
                     {m.entity: keys for m in cfg.members
                      if (keys := _probe_keys(index[m.entity][0]))}, g):
-                _mark("hwm-seed")
                 inserts = dict(pool.map(increment, cfg.members))
-            _mark("increment-construct")
     except BaseException:
         # a failed build must not leak marks or cached copies into the
         # caller's registry (round-6 advice)
@@ -349,30 +322,11 @@ def run_replay(spark, reg: Registry, cfg: ReplayConfig, g: GlobalConfig,
     finals = [targets[m.entity].unionByName(inserts[m.entity])
               .selectExpr(*_member_exprs(m, g))
               for m in cfg.members]
-    # Small-vault union split: executed as ONE stage, the 13-branch
-    # union's task binary serializes every branch's full lineage
-    # (insert plans + cached-subtree recovery plans), and EVERY task
-    # pays its deserialization — measured 565 tasks x ~78 ms deser
-    # (44 core-s, stage 910 in plans/r12 notes) at sf0.1. A per-branch
-    # AQE rebalance bounds each stage's closure to one branch and
-    # leaves the union a 13-way exchange read. The exchange reshuffles
-    # the FULL result, so it only pays when the vault is small: gated
-    # on the phase-1 staging bytes (the result is staging + inserts,
-    # same order of magnitude) — at production scale the gate never
-    # fires and the zero-shuffle union stands.
-    try:
-        split_max = int(spark.conf.get(
-            "spark.dv4dbt.replay.unionSplitMaxBytes",
-            str(1024 * 1024 * 1024)))
-    except Exception:
-        split_max = 1024 * 1024 * 1024
-    if split_max > 0:
-        staged = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _dirs, fs in _os.walk(merged) for f in fs)
-        if staged < split_max:
-            finals = [f.hint("rebalance") for f in finals]
-    return reduce(lambda a, b: a.unionByName(b), finals)
+    # Small-vault union split (operators/bundle.py): each branch's
+    # lineage carries the insert plans plus the cached-subtree recovery
+    # plans, so a one-stage 13-branch union ships all of them to every
+    # task.
+    return split_small_union(reg, finals)
 
 
 def replay_oracle(b: SqlBuilder, reg: Registry, cfg: ReplayConfig,

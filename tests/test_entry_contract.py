@@ -11,6 +11,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 
 from datavault4dbt_spark import fixtures
+from datavault4dbt_spark.context import testdata_registry as make_registry
+from datavault4dbt_spark.operators import bundle
 
 
 def test_entry_runs_and_has_stable_schema(spark):
@@ -43,20 +45,27 @@ def test_queries_and_oracle_keys_consistent():
     assert exposed == set(fixtures.declared_entity_names())
 
 
-def test_bundle_union_split_gated_on_source_bytes(spark, sf_dir):
-    """Bundle union split (operators/bundle.py): on the small testdata
-    registry every thematic bundle's union gets per-branch rebalance
-    exchanges; with the gate conf at 0 (or an unknown-scale registry,
-    source_bytes == 0) the union must stay exchange-free at the top —
-    the production shape."""
-    df = fixtures.entity_query("vault_core_bundle")(spark, sf_dir)
-    assert "RebalancePartitions" in \
-        df._jdf.queryExecution().analyzed().toString()
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
 
-    spark.conf.set("spark.dv4dbt.bundle.unionSplitMaxBytes", "0")
-    try:
-        off = fixtures.entity_query("vault_core_bundle")(spark, sf_dir)
-        assert "RebalancePartitions" not in \
-            off._jdf.queryExecution().analyzed().toString()
-    finally:
-        spark.conf.unset("spark.dv4dbt.bundle.unionSplitMaxBytes")
+
+def test_bundle_union_split_gated_on_source_bytes(spark, sf_dir,
+                                                  monkeypatch):
+    """Bundle union split: on the small testdata registry every thematic
+    bundle's union gets per-branch rebalance exchanges; with the
+    registry's source bytes at the ceiling (or an unknown-scale
+    registry, source_bytes == 0) the union must stay exchange-free at
+    the top — the production shape."""
+    df = fixtures.entity_query("vault_core_bundle")(spark, sf_dir)
+    assert "RebalancePartitions" in _analyzed(df)
+
+    monkeypatch.setattr(bundle, "UNION_SPLIT_MAX_SOURCE_BYTES",
+                        make_registry(sf_dir).source_bytes)
+    off = fixtures.entity_query("vault_core_bundle")(spark, sf_dir)
+    assert "RebalancePartitions" not in _analyzed(off)
+    monkeypatch.undo()
+
+    reg = fixtures.registry(spark, sf_dir)
+    reg.source_bytes = 0
+    unknown = reg.load(spark, "vault_core_bundle")
+    assert "RebalancePartitions" not in _analyzed(unknown)

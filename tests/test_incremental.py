@@ -166,24 +166,24 @@ def test_replay_query_phase2_contributes(spark, sf_dir):
             assert per.get(m.entity, 0) > 0, f"phase 2 empty for {m.entity}"
 
 
-def test_replay_union_split_gated_on_staging_bytes(spark, sf_dir):
-    """The small-vault union split: each final branch gets its own
-    AQE rebalance exchange when the phase-1 staging table is under
-    spark.dv4dbt.replay.unionSplitMaxBytes (default 1 GiB — always on
-    for the testdata), bounding per-stage task closures to one branch;
-    setting the conf to 0 disables the split and the union must be
-    exchange-free at the top (the production shape)."""
+def test_replay_union_split_gated_on_source_bytes(spark, sf_dir):
+    """The small-vault union split (operators/bundle.py:
+    split_small_union): each final branch gets its own AQE rebalance
+    exchange when the registry's source bytes are known and under the
+    ceiling (always true for the testdata), bounding per-stage task
+    closures to one branch; an unknown-scale registry
+    (source_bytes == 0) keeps the union exchange-free at the top (the
+    production shape)."""
     df = fixtures.entity_query("incremental_replay")(spark, sf_dir)
     assert "RebalancePartitions" in df._jdf.queryExecution() \
         .analyzed().toString(), "split gate should fire on testdata"
 
-    spark.conf.set("spark.dv4dbt.replay.unionSplitMaxBytes", "0")
-    try:
-        df_off = fixtures.entity_query("incremental_replay")(spark, sf_dir)
-        assert "RebalancePartitions" not in df_off._jdf.queryExecution() \
-            .analyzed().toString(), "conf=0 must disable the split"
-    finally:
-        spark.conf.unset("spark.dv4dbt.replay.unionSplitMaxBytes")
+    reg = fixtures.registry(spark, sf_dir)
+    reg.source_bytes = 0
+    reg.persist_names.update(fixtures._multi_consumed("incremental_replay"))
+    df_off = reg.load(spark, "incremental_replay")
+    assert "RebalancePartitions" not in df_off._jdf.queryExecution() \
+        .analyzed().toString(), "unknown scale must not split"
 
 
 def test_store_known_schema_reads(spark, tmp_path):

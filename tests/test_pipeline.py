@@ -100,6 +100,25 @@ def test_run_pipeline_full_then_idempotent_rerun(spark, sf_dir, tmp_path):
     assert store.read("hub_customer").count() == want_hub.count()
 
 
+class _FailingAppendStore(ParquetStore):
+    def append(self, name, df, **kw):
+        raise OSError("disk full")
+
+
+def test_run_pipeline_failed_write_releases_delta_cache(spark, sf_dir,
+                                                        tmp_path):
+    # count_rows persists the delta before its count + write; a failed
+    # write must still unpersist it, or it stays cached for the life of
+    # the session
+    fixtures.ensure_session_conf(spark)
+    spark.catalog.clearCache()
+    decls = {"stage_customer": _decls()["stage_customer"]}
+    with pytest.raises(OSError, match="disk full"):
+        run_pipeline(spark, decls, _FailingAppendStore(spark, str(tmp_path)),
+                     make_registry(sf_dir))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_select_nodes_grammar():
     from datavault4dbt_spark.plans.pipeline import select_nodes
     decls = _decls()

@@ -11,7 +11,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.qbench import build_session, warmup  # noqa: E402
+from bench import build_session, warmup  # noqa: E402
 
 
 def main():

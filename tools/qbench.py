@@ -23,42 +23,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def build_session():
-    from pyspark.sql import SparkSession
-    from datavault4dbt_spark.context import configure_session_builder
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-    spark = configure_session_builder(
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dv4dbt-qbench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false"),
-        local_bench=True,
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
-def warmup(spark, sf_dir):
-    from datavault4dbt_spark import fixtures
-
-    fixtures.entity_query("stage_nation")(spark, sf_dir) \
-        .write.format("noop").mode("overwrite").save()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-    spark.range(256).selectExpr(
-        "aggregate(zip_with(array(cast(id AS DOUBLE)), array(2.0d), "
-        "(x, y) -> x * y), cast(0.0 AS DOUBLE), (acc, v) -> acc + v) s") \
-        .write.format("noop").mode("overwrite").save()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4).repartition(cpus) \
-        .mapInPandas(lambda it: it, "id bigint") \
-        .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+from bench import build_session, warmup  # noqa: E402
 
 
 def main():
