@@ -492,8 +492,8 @@ EFF_SATS = {
 REF_HUBS = {
     "ref_hub_nation": RefHubConfig(
         "ref_hub_nation", ("n_nationkey",), (EntitySource("stage_nation"),)),
-    # batched source so the replay can drive ref_hub's concat-key
-    # anti-insert with real phase-2 inserts (stage_nation is
+    # batched source so the replay can drive ref_hub's ref-key
+    # anti-join with real phase-2 inserts (stage_nation is
     # single-batch); bundle-verified full load, replay-verified
     # incremental
     "ref_hub_part": RefHubConfig(
@@ -1759,8 +1759,8 @@ REPLAYS = {
             ReplayMember("nh_sat_user_event", "hk_event_nl",
                          "concat(CAST(user_id AS STRING), ':', "
                          "event_type, ':', coalesce(props, ''))"),
-            # ref_hub: earliest-per-ref-key dedup + concat-key
-            # anti-insert (batched parts: day-2/3 keys are new)
+            # ref_hub: earliest-per-ref-key dedup + anti-join on the
+            # ref-key tuple (batched parts: day-2/3 keys are new)
             ReplayMember("ref_hub_part", "CAST(p_partkey AS STRING)",
                          "CAST(NULL AS STRING)"),
             # pit: snapshot-extension increment; the hd folds both

@@ -30,7 +30,7 @@ common range — all TPC-H monetary/quantity columns do.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..context import GlobalConfig, DEFAULT
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..functions.hashing import HashSpec, hash_expr_sql, SPARK, DUCKDB
 from ..plans.sqlbuild import SqlBuilder
+from .sat import end_dating_sql
 
 
 @dataclass(frozen=True)
@@ -108,7 +109,6 @@ def build_bridge(spark, reg: Registry, cfg: BridgeConfig,
     # object per field (guide §5); the end-dating window rides inside
     # the same selectExpr (identical expression to the former
     # lead/coalesce Column chain)
-    eot = f"CAST('{g.end_of_all_times}' AS TIMESTAMP)"
     for i, leg in enumerate(cfg.legs):
         lk = reg.load(spark, leg.link_entity).selectExpr(
             f"{leg.link_hk} AS __lhk_{i}",
@@ -123,9 +123,7 @@ def build_bridge(spark, reg: Registry, cfg: BridgeConfig,
             eff = reg.load(spark, leg.eff_sat).selectExpr(
                 f"{leg.link_hk} AS __ehk_{i}",
                 f"{g.ldts_alias} AS __eldts_{i}",
-                f"COALESCE(LEAD({g.ldts_alias} - INTERVAL 1 MICROSECOND)"
-                f" OVER (PARTITION BY {leg.link_hk} "
-                f"ORDER BY {g.ldts_alias}), {eot}) AS __eledts_{i}",
+                f"{end_dating_sql((leg.link_hk,), g)} AS __eledts_{i}",
                 f"{leg.eff_active_col} AS __eact_{i}")
             out = (out.join(
                 eff, (out[f"__lhk_{i}"] == eff[f"__ehk_{i}"])

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..context import GlobalConfig, DEFAULT, Registry, ensure_identifier
 from ..plans.sqlbuild import SqlBuilder

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter
+from ..plans.incremental import hwm_filter, first_per_key
 
 
 @dataclass(frozen=True)
@@ -56,10 +56,8 @@ def build_eff_sat_v0(spark, reg: Registry, cfg: EffSatConfig,
 
     current = None
     if target is not None:
-        current = (target.selectExpr(
-                       "*", f"ROW_NUMBER() OVER (PARTITION BY {hk} "
-                       f"ORDER BY {ldts} DESC) AS __rn")
-                   .filter("__rn = 1").selectExpr(hk, act, rsrc))
+        current = first_per_key(target, (hk,), f"{ldts} DESC",
+                                (hk, act, rsrc))
 
     if not cfg.source_is_single_batch:
         hashkeys = src.groupBy(hk).agg(F.min(ldts).alias("__first"))

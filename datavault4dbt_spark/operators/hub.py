@@ -1,9 +1,12 @@
-"""Hub operator: earliest-arrival distinct business keys.
+"""Hub operator: earliest-arrival distinct business keys, and the
+earliest-arrival loader that link, nh_link and ref_hub share.
 
 Re-implements reference: macros/tables/hub.sql:13-129 (dispatcher) /
 macros/tables/databricks/hub.sql:1-261. Pipeline: per-source select with
 column mapping -> UNION ALL -> earliest row per hashkey (ROW_NUMBER) ->
-[incremental: anti-join vs target] -> insert.
+[incremental: anti-join vs target] -> insert. A link is "the same
+pattern as hub" in the reference, so every builder of the pattern calls
+``load_earliest_arrival``; only the oracles stay written per entity.
 
 Determinism note: the reference orders the dedup window by ldts only
 (hub.sql:228), which is nondeterministic under ties; we add rsrc as a
@@ -19,11 +22,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter, hwm_filter_static, anti_join_new
+from ..plans.incremental import (hwm_filter, hwm_filter_static,
+                                 first_per_key, anti_join_new)
 
 
 @dataclass(frozen=True)
@@ -48,41 +52,54 @@ class HubConfig:
     additional_columns: tuple = ()
 
 
-def _source_select(df: DataFrame, sm: EntitySource, cfg: HubConfig,
-                   g: GlobalConfig) -> DataFrame:
-    hk = sm.hk_column or cfg.hashkey
-    bks = sm.bk_columns or cfg.business_keys
-    # one string projection = one py4j round trip (guide §5); every
-    # name here is interpolated into the oracle SQL already, so the
-    # plain-identifier contract holds
-    sel = [f"{hk} AS {cfg.hashkey}"]
-    sel += [f"{b} AS {t}" for b, t in zip(bks, cfg.business_keys)]
-    sel += list(cfg.additional_columns)
-    sel += [g.ldts_alias, g.rsrc_alias]
-    return df.selectExpr(*sel)
+def load_earliest_arrival(spark, reg: Registry, cfg, g: GlobalConfig,
+                          keys: tuple, mapping, target: DataFrame | None,
+                          hwm: bool = True, distinct: bool = False,
+                          first: bool = True) -> DataFrame:
+    """Insert the earliest-arriving row of every key absent from target.
+
+    ``cfg`` supplies ``source_models`` and ``additional_columns``;
+    ``mapping(sm)`` returns the source's (key pairs, payload pairs) of
+    (source column, target column): keys lead the select list, payload
+    trails ldts/rsrc (the reference's select order). ``distinct`` is
+    nh_link's union_strategy='distinct'; ``first=False`` skips the
+    earliest-per-key window (single-batch nh_link)."""
+    parts = []
+    for sm in cfg.source_models:
+        head, tail = mapping(sm)
+        # one string projection = one py4j round trip (guide §5); every
+        # name here is interpolated into the oracle SQL already, so the
+        # plain-identifier contract holds
+        sel = [f"{s} AS {t}" for s, t in head]
+        sel += [*cfg.additional_columns, g.ldts_alias, g.rsrc_alias]
+        sel += [f"{s} AS {t}" for s, t in tail]
+        src = reg.load(spark, sm.name).selectExpr(*sel)
+        if hwm:
+            # per-source watermark when the source declares rsrc_static
+            # (reference: hub.sql:44-131, link.sql:44-131, ref_hub.sql:
+            # 39-100, nh_link.sql:61-100 record-source lookup — a NEW
+            # source's history predates the global HWM and must not be
+            # filtered by the other sources' watermarks), global
+            # max(ldts) otherwise
+            src = (hwm_filter_static(src, target, sm.rsrc_static, g)
+                   if sm.rsrc_static else hwm_filter(src, target, g))
+        parts.append(src)
+    union = reduce(lambda a, b: a.unionByName(b), parts)
+    if distinct and len(parts) > 1:
+        union = union.distinct()
+    if first:
+        union = first_per_key(union, keys, f"{g.ldts_alias}, {g.rsrc_alias}")
+    return anti_join_new(union, target, list(keys))
 
 
 def build_hub(spark, reg: Registry, cfg: HubConfig, g: GlobalConfig = DEFAULT,
               target: DataFrame | None = None, disable_hwm: bool = False) -> DataFrame:
-    parts = []
-    for sm in cfg.source_models:
-        src = _source_select(reg.load(spark, sm.name), sm, cfg, g)
-        if target is not None and not disable_hwm:
-            # per-source watermark when the source declares rsrc_static
-            # (reference: hub.sql:44-131), global max(ldts) otherwise
-            if sm.rsrc_static:
-                src = hwm_filter_static(src, target, sm.rsrc_static, g)
-            else:
-                src = hwm_filter(src, target, g)
-        parts.append(src)
-    union = reduce(lambda a, b: a.unionByName(b), parts)
-    # window as SQL text inside one selectExpr (guide §5 — identical
-    # plan, one py4j round trip instead of Window/Column objects)
-    dedup = (union.selectExpr(
-                "*", f"ROW_NUMBER() OVER (PARTITION BY {cfg.hashkey} "
-                f"ORDER BY {g.ldts_alias}, {g.rsrc_alias}) AS __rn")
-             .filter("__rn = 1").drop("__rn"))
-    return anti_join_new(dedup, target, [cfg.hashkey])
+    return load_earliest_arrival(
+        spark, reg, cfg, g, (cfg.hashkey,),
+        lambda sm: ([(sm.hk_column or cfg.hashkey, cfg.hashkey),
+                     *zip(sm.bk_columns or cfg.business_keys,
+                          cfg.business_keys)], ()),
+        target, hwm=not disable_hwm)
 
 
 def hub_oracle(b: SqlBuilder, reg: Registry, cfg: HubConfig,

@@ -3,19 +3,19 @@
 Re-implements reference: macros/tables/link.sql:8 /
 macros/tables/databricks/link.sql:1-267 — identical algorithm to the hub
 keyed on the link hashkey with >= 2 foreign hashkeys (validation at
-databricks/link.sql:4-10).
+databricks/link.sql:4-10), so the builder is a config shim over the
+hub's ``load_earliest_arrival``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter, hwm_filter_static, anti_join_new
+from .hub import load_earliest_arrival
 
 
 @dataclass(frozen=True)
@@ -33,35 +33,18 @@ class LinkConfig:
                 "(reference: macros/tables/databricks/link.sql:4-10)")
 
 
+def link_key_pairs(sm, cfg) -> list:
+    """(source, target) column pairs of a link's own and foreign
+    hashkeys for one source (shared with nh_link)."""
+    return [(sm.hk_column or cfg.link_hashkey, cfg.link_hashkey),
+            *zip(sm.fk_columns or cfg.foreign_hashkeys, cfg.foreign_hashkeys)]
+
+
 def build_link(spark, reg: Registry, cfg: LinkConfig, g: GlobalConfig = DEFAULT,
                target: DataFrame | None = None, disable_hwm: bool = False) -> DataFrame:
-    parts = []
-    for sm in cfg.source_models:
-        df = reg.load(spark, sm.name)
-        hk = sm.hk_column or cfg.link_hashkey
-        fks = sm.fk_columns or cfg.foreign_hashkeys
-        # one string projection = one py4j round trip (guide §5)
-        sel = [f"{hk} AS {cfg.link_hashkey}"]
-        sel += [f"{s} AS {t}" for s, t in zip(fks, cfg.foreign_hashkeys)]
-        sel += list(cfg.additional_columns)
-        sel += [g.ldts_alias, g.rsrc_alias]
-        src = df.selectExpr(*sel)
-        if target is not None and not disable_hwm:
-            # per-source watermark with probe when rsrc_static declared
-            # (reference: databricks/link.sql:44-131 mirror of the hub)
-            if sm.rsrc_static:
-                src = hwm_filter_static(src, target, sm.rsrc_static, g)
-            else:
-                src = hwm_filter(src, target, g)
-        parts.append(src)
-    union = reduce(lambda a, b: a.unionByName(b), parts)
-    # window as SQL text inside one selectExpr (guide §5 — identical
-    # plan, one py4j round trip instead of Window/Column objects)
-    dedup = (union.selectExpr(
-                "*", f"ROW_NUMBER() OVER (PARTITION BY {cfg.link_hashkey}"
-                f" ORDER BY {g.ldts_alias}, {g.rsrc_alias}) AS __rn")
-             .filter("__rn = 1").drop("__rn"))
-    return anti_join_new(dedup, target, [cfg.link_hashkey])
+    return load_earliest_arrival(
+        spark, reg, cfg, g, (cfg.link_hashkey,),
+        lambda sm: (link_key_pairs(sm, cfg), ()), target, hwm=not disable_hwm)
 
 
 def link_oracle(b: SqlBuilder, reg: Registry, cfg: LinkConfig,

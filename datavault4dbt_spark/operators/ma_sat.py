@@ -16,11 +16,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter
+from ..plans.incremental import hwm_filter, first_per_key
+from .sat import end_dating_sql, with_is_current
 
 
 @dataclass(frozen=True)
@@ -78,14 +79,11 @@ def build_ma_sat_v0(spark, reg: Registry, cfg: MaSatConfig, g: GlobalConfig = DE
     # performance_filter semi-join — see operators/sat.py note): keys
     # absent from the delta cannot match the anti-join anyway
     batch_keys = out.select(cfg.parent_hashkey).distinct()
-    latest = (target.selectExpr(cfg.parent_hashkey, cfg.hdiff,
-                                g.ldts_alias)
-              .join(batch_keys, on=cfg.parent_hashkey, how="left_semi")
-              .selectExpr("*", f"ROW_NUMBER() OVER (PARTITION BY "
-                          f"{cfg.parent_hashkey} ORDER BY {g.ldts_alias}"
-                          f" DESC) AS __rn")
-              .filter("__rn = 1")
-              .selectExpr(cfg.parent_hashkey, cfg.hdiff))
+    latest = first_per_key(
+        target.selectExpr(cfg.parent_hashkey, cfg.hdiff, g.ldts_alias)
+        .join(batch_keys, on=cfg.parent_hashkey, how="left_semi"),
+        (cfg.parent_hashkey,), f"{g.ldts_alias} DESC",
+        (cfg.parent_hashkey, cfg.hdiff))
     return out.join(latest, on=[cfg.parent_hashkey, cfg.hdiff], how="left_anti")
 
 
@@ -120,20 +118,15 @@ class MaSatV1Config:
 def build_ma_sat_v1(spark, reg: Registry, cfg: MaSatV1Config,
                     g: GlobalConfig = DEFAULT) -> DataFrame:
     src = reg.load(spark, cfg.ma_sat_v0)
-    loads = src.select(cfg.hashkey, g.ldts_alias).distinct()
-    w = Window.partitionBy(cfg.hashkey).orderBy(g.ldts_alias)
-    eot = F.to_timestamp(F.lit(g.end_of_all_times))
-    end_dated = loads.withColumn(
-        g.ledts_alias,
-        F.coalesce(F.lead(F.expr(f"{g.ldts_alias} - INTERVAL 1 MICROSECOND")).over(w),
-                   eot))
+    # end-dating on the DISTINCT (hk, ldts) level as SQL text in one
+    # selectExpr (guide §5, same plan as the Window/Column form)
+    end_dated = src.select(cfg.hashkey, g.ldts_alias).distinct().selectExpr(
+        "*", f"{end_dating_sql((cfg.hashkey,), g)} AS {g.ledts_alias}")
     out = src.join(end_dated, on=[cfg.hashkey, g.ldts_alias],
                    how="left").selectExpr(
         cfg.hashkey, cfg.hashdiff, g.rsrc_alias, g.ldts_alias,
         g.ledts_alias, *cfg.src_ma_key, *cfg.payload)
-    if cfg.add_is_current_flag:
-        out = out.withColumn(g.is_current_col_alias, F.col(g.ledts_alias) == eot)
-    return out
+    return with_is_current(out, g) if cfg.add_is_current_flag else out
 
 
 def ma_sat_v1_oracle(b: SqlBuilder, reg: Registry, cfg: MaSatV1Config,

@@ -13,13 +13,14 @@ earliest-per-hashkey dedup at 253-264).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter, hwm_filter_static, anti_join_new
+from ..plans.incremental import hwm_filter, first_per_key, anti_join_new
+from .hub import load_earliest_arrival
+from .link import link_key_pairs
 
 
 @dataclass(frozen=True)
@@ -41,10 +42,7 @@ def build_nh_sat(spark, reg: Registry, cfg: NhSatConfig, g: GlobalConfig = DEFAU
     if target is not None and not disable_hwm:
         src = hwm_filter(src, target, g)
     if not cfg.source_is_single_batch:
-        src = (src.selectExpr(
-                   "*", f"ROW_NUMBER() OVER (PARTITION BY "
-                   f"{cfg.parent_hashkey} ORDER BY {g.ldts_alias}) AS __rn")
-               .filter("__rn = 1").drop("__rn"))
+        src = first_per_key(src, (cfg.parent_hashkey,), g.ldts_alias)
     return anti_join_new(src, target, [cfg.parent_hashkey])
 
 
@@ -73,39 +71,13 @@ class NhLinkConfig:
 
 def build_nh_link(spark, reg: Registry, cfg: NhLinkConfig, g: GlobalConfig = DEFAULT,
                   target: DataFrame | None = None, disable_hwm: bool = False) -> DataFrame:
-    parts = []
-    for sm in cfg.source_models:
-        df = reg.load(spark, sm.name)
-        hk = sm.hk_column or cfg.link_hashkey
-        fks = sm.fk_columns or cfg.foreign_hashkeys
-        pay = sm.payload or cfg.payload
-        # one string projection = one py4j round trip (guide §5)
-        sel = [f"{hk} AS {cfg.link_hashkey}"]
-        sel += [f"{s} AS {t}" for s, t in zip(fks, cfg.foreign_hashkeys)]
-        sel += list(cfg.additional_columns)
-        sel += [g.ldts_alias, g.rsrc_alias]
-        sel += [f"{s} AS {t}" for s, t in zip(pay, cfg.payload)]
-        src = df.selectExpr(*sel)
-        if target is not None and not disable_hwm:
-            # per-source watermark when the source declares rsrc_static
-            # (reference: nh_link.sql:61-100 record-source performance
-            # lookup — a NEW source's history predates the global HWM
-            # and must not be filtered by other sources' watermarks)
-            if sm.rsrc_static:
-                src = hwm_filter_static(src, target, sm.rsrc_static, g)
-            else:
-                src = hwm_filter(src, target, g)
-        parts.append(src)
-    union = reduce(lambda a, b: a.unionByName(b), parts)
-    if cfg.union_strategy == "distinct" and len(parts) > 1:
-        union = union.distinct()
-    if not cfg.source_is_single_batch:
-        union = (union.selectExpr(
-                     "*", f"ROW_NUMBER() OVER (PARTITION BY "
-                     f"{cfg.link_hashkey} ORDER BY {g.ldts_alias}, "
-                     f"{g.rsrc_alias}) AS __rn")
-                 .filter("__rn = 1").drop("__rn"))
-    return anti_join_new(union, target, [cfg.link_hashkey])
+    return load_earliest_arrival(
+        spark, reg, cfg, g, (cfg.link_hashkey,),
+        lambda sm: (link_key_pairs(sm, cfg),
+                    zip(sm.payload or cfg.payload, cfg.payload)),
+        target, hwm=not disable_hwm,
+        distinct=cfg.union_strategy == "distinct",
+        first=not cfg.source_is_single_batch)
 
 
 def nh_link_oracle(b: SqlBuilder, reg: Registry, cfg: NhLinkConfig,

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..functions.hashing import HashSpec, hash_expr_sql, sql_str, SPARK, DUCKDB
 from ..plans.sqlbuild import SqlBuilder
+from .sat import end_dating_sql
 
 
 @dataclass(frozen=True)
@@ -59,7 +60,6 @@ def build_pit(spark, reg: Registry, cfg: PitConfig, g: GlobalConfig = DEFAULT,
     # Column object per field (guide §5); the end-dating window rides
     # inside the same selectExpr (identical expression to the former
     # lead/coalesce Column chain)
-    eot = f"CAST('{g.end_of_all_times}' AS TIMESTAMP)"
     bot = f"CAST('{g.beginning_of_all_times}' AS TIMESTAMP)"
     sel = []
     if cfg.pit_type:
@@ -79,9 +79,7 @@ def build_pit(spark, reg: Registry, cfg: PitConfig, g: GlobalConfig = DEFAULT,
             s = s.selectExpr(
                 f"{cfg.hashkey} AS __hk_{sat}",
                 f"{g.ldts_alias} AS __ldts_{sat}",
-                f"COALESCE(LEAD({g.ldts_alias} - INTERVAL 1 MICROSECOND)"
-                f" OVER (PARTITION BY {cfg.hashkey} "
-                f"ORDER BY {g.ldts_alias}), {eot}) AS __ledts_{sat}")
+                f"{end_dating_sql((cfg.hashkey,), g)} AS __ledts_{sat}")
         out = out.join(
             s, (out[cfg.hashkey] == s[f"__hk_{sat}"])
             & (out[g.sdts_alias] >= s[f"__ldts_{sat}"])

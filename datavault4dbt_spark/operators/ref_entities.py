@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..plans.sqlbuild import SqlBuilder
-from ..plans.incremental import hwm_filter, hwm_filter_static
+from ..plans.incremental import hwm_filter
+from .hub import load_earliest_arrival
+from .sat import end_dating_sql, insert_changed, with_is_current
 
 
 @dataclass(frozen=True)
@@ -36,34 +38,10 @@ class RefHubConfig:
 
 def build_ref_hub(spark, reg: Registry, cfg: RefHubConfig, g: GlobalConfig = DEFAULT,
                   target: DataFrame | None = None) -> DataFrame:
-    parts = []
-    for sm in cfg.source_models:
-        df = reg.load(spark, sm.name)
-        keys = sm.bk_columns or cfg.ref_keys
-        # one string projection = one py4j round trip (guide §5)
-        sel = [f"{s} AS {t}" for s, t in zip(keys, cfg.ref_keys)]
-        sel += list(cfg.additional_columns)
-        sel += [g.ldts_alias, g.rsrc_alias]
-        src = df.selectExpr(*sel)
-        if target is not None:
-            # per-source watermark for rsrc_static sources (reference:
-            # ref_hub.sql:39-100): a newly added source's older history
-            # must not be dropped by the other sources' global HWM
-            if sm.rsrc_static:
-                src = hwm_filter_static(src, target, sm.rsrc_static, g)
-            else:
-                src = hwm_filter(src, target, g)
-        parts.append(src)
-    union = reduce(lambda a, b: a.unionByName(b), parts)
-    dedup = (union.selectExpr(
-                 "*", f"ROW_NUMBER() OVER (PARTITION BY "
-                 f"{', '.join(cfg.ref_keys)} ORDER BY {g.ldts_alias}, "
-                 f"{g.rsrc_alias}) AS __rn")
-             .filter("__rn = 1").drop("__rn"))
-    if target is not None:
-        dedup = dedup.join(target.select(*cfg.ref_keys).distinct(),
-                           on=list(cfg.ref_keys), how="left_anti")
-    return dedup
+    return load_earliest_arrival(
+        spark, reg, cfg, g, cfg.ref_keys,
+        lambda sm: (zip(sm.bk_columns or cfg.ref_keys, cfg.ref_keys), ()),
+        target)
 
 
 def ref_hub_oracle(b: SqlBuilder, reg: Registry, cfg: RefHubConfig,
@@ -98,47 +76,8 @@ def build_ref_sat_v0(spark, reg: Registry, cfg: RefSatConfig,
         *cfg.payload)
     if target is not None:
         src = hwm_filter(src, target, g)
-    if not cfg.source_is_single_batch:
-        # COALESCE(eq, false) mirrors the oracle's CASE (drop only on
-        # strict TRUE): NULL hashdiffs never NULL-out the keep-predicate
-        over = (f"OVER (PARTITION BY {', '.join(cfg.parent_ref_keys)} "
-                f"ORDER BY {g.ldts_alias})")
-        src = (src.selectExpr(
-                   "*",
-                   f"NOT COALESCE({cfg.src_hashdiff} = "
-                   f"LAG({cfg.src_hashdiff}) {over}, FALSE) AS __keep",
-                   f"ROW_NUMBER() {over} AS __rn")
-               .filter("__keep").drop("__keep"))
-    else:
-        src = src.withColumn("__rn", F.lit(1))
-    if target is not None:
-        # Only the FIRST delta row per key compares against the target's
-        # latest hashdiff (reference: ref_sat_v0.sql:135-145 `rn = 1` in
-        # the NOT EXISTS) — anti-joining every delta row would drop a
-        # reversion group (B then back to A) whose hashdiff equals the
-        # target's latest, ending history at B forever.
-        # latest-window restricted to the batch's ref keys (reference
-        # performance_filter semi-join — see operators/sat.py note);
-        # NULL ref keys never semi-match, and never match the compare
-        # join either, so the prune is result-identical
-        batch_keys = src.select(*cfg.parent_ref_keys).distinct()
-        latest = (target.join(batch_keys, on=list(cfg.parent_ref_keys),
-                              how="left_semi")
-                  .selectExpr("*", f"ROW_NUMBER() OVER (PARTITION BY "
-                              f"{', '.join(cfg.parent_ref_keys)} ORDER "
-                              f"BY {g.ldts_alias} DESC) AS __rn2")
-                  .filter("__rn2 = 1")
-                  .selectExpr(*cfg.parent_ref_keys,
-                              f"{cfg.src_hashdiff} AS __t_hdiff"))
-        # COALESCE(eq, false): a NULL hashdiff on either side of the
-        # compare must insert (reference NOT EXISTS drops only on strict
-        # TRUE, ref_sat_v0.sql:135-145), not evaluate to NULL and vanish
-        match = ((F.col("__rn") == 1)
-                 & F.coalesce(F.col("__t_hdiff") == F.col(cfg.src_hashdiff),
-                              F.lit(False)))
-        src = (src.join(latest, on=list(cfg.parent_ref_keys), how="left")
-               .filter(~match).drop("__t_hdiff"))
-    return src.drop("__rn")
+    return insert_changed(src, target, cfg.parent_ref_keys, cfg.src_hashdiff,
+                          g, cfg.source_is_single_batch)
 
 
 def ref_sat_v0_oracle(b: SqlBuilder, reg: Registry, cfg: RefSatConfig,
@@ -167,21 +106,13 @@ class RefSatV1Config:
 
 def build_ref_sat_v1(spark, reg: Registry, cfg: RefSatV1Config,
                      g: GlobalConfig = DEFAULT) -> DataFrame:
-    src = reg.load(spark, cfg.ref_sat_v0)
-    keys = ", ".join(cfg.parent_ref_keys)
-    eot = f"CAST('{g.end_of_all_times}' AS TIMESTAMP)"
     # one string projection = one py4j round trip (guide §5); the
     # end-dating window rides inside the same selectExpr
-    out = src.selectExpr(
+    out = reg.load(spark, cfg.ref_sat_v0).selectExpr(
         *cfg.parent_ref_keys, cfg.hashdiff, g.rsrc_alias, g.ldts_alias,
-        f"COALESCE(LEAD({g.ldts_alias} - INTERVAL 1 MICROSECOND) OVER "
-        f"(PARTITION BY {keys} ORDER BY {g.ldts_alias}), {eot}) "
-        f"AS {g.ledts_alias}",
+        f"{end_dating_sql(cfg.parent_ref_keys, g)} AS {g.ledts_alias}",
         *cfg.payload)
-    if cfg.add_is_current_flag:
-        out = out.withColumn(g.is_current_col_alias,
-                             F.expr(f"{g.ledts_alias} = {eot}"))
-    return out
+    return with_is_current(out, g) if cfg.add_is_current_flag else out
 
 
 def ref_sat_v1_oracle(b: SqlBuilder, reg: Registry, cfg: RefSatV1Config,

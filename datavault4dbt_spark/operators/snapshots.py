@@ -16,7 +16,7 @@ testing (the reference uses CURRENT_TIMESTAMP()).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..context import GlobalConfig, DEFAULT
 from ..plans.sqlbuild import SqlBuilder

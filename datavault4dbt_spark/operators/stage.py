@@ -20,7 +20,7 @@ same config for the correctness gate.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 

@@ -10,6 +10,8 @@ appended insert-only (no MERGE/UPDATE anywhere).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT
@@ -30,9 +32,6 @@ from ..context import GlobalConfig, DEFAULT
 
 _HWM_PROBES: dict = {}
 _GLOBAL_PROBE = "__global__"
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -172,6 +171,19 @@ def hwm_filter_static(src: DataFrame, target: DataFrame | None,
     if m is None:                     # only ghost rows so far
         return src
     return src.filter(F.col(g.ldts_alias) > F.lit(m))
+
+
+def first_per_key(df: DataFrame, keys, order_sql: str,
+                  cols: tuple = ()) -> DataFrame:
+    """The first row per ``keys`` tuple in ``order_sql`` order (the
+    reference's ``QUALIFY ROW_NUMBER() ... = 1``), projected to ``cols``
+    when given. The window rides as SQL text in one selectExpr: one py4j
+    round trip instead of Window/Column objects, same plan (guide §5)."""
+    out = (df.selectExpr(
+               "*", f"ROW_NUMBER() OVER (PARTITION BY {', '.join(keys)} "
+               f"ORDER BY {order_sql}) AS __rn")
+           .filter("__rn = 1"))
+    return out.selectExpr(*cols) if cols else out.drop("__rn")
 
 
 def anti_join_new(candidates: DataFrame, target: DataFrame | None,

@@ -14,7 +14,7 @@ partition pruning work), and leave partition discovery to Spark.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..context import Registry
 

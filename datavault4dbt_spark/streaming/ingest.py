@@ -26,12 +26,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT, Registry
 from ..operators.stage import StageConfig, build_stage
-from ..operators.hub import HubConfig, build_hub
-from ..operators.link import LinkConfig, build_link
-from ..operators.nh import (NhSatConfig, NhLinkConfig, build_nh_sat,
-                            build_nh_link)
-from ..operators.sat import SatConfig, build_sat_v0
-from ..operators.ma_sat import MaSatConfig, build_ma_sat_v0
+from ..operators.hub import build_hub
+from ..operators.link import build_link
+from ..operators.nh import build_nh_sat, build_nh_link
+from ..operators.sat import build_sat_v0
+from ..operators.ma_sat import build_ma_sat_v0
 from ..plans.incremental import ParquetStore, anti_join_new
 
 
@@ -58,11 +57,70 @@ def open_event_stream(spark, cfg: StreamIngestConfig, schema) -> DataFrame:
             .parquet(cfg.source_dir))
 
 
+def _require_whole_groups(new: DataFrame, target: DataFrame, cfg,
+                          g: GlobalConfig) -> None:
+    """ma_sat streaming guard: a (parent_hashkey, ldts) group already in
+    the target with a different group hashdiff arrived split across
+    micro-batches (see micro_batch_loader) — fail loudly instead of
+    letting the identity anti-join silently drop the rest."""
+    keys = [cfg.parent_hashkey, g.ldts_alias]
+    split = (new.select(*keys, cfg.hdiff).distinct()
+             .join(target.select(*keys, F.col(cfg.hdiff)
+                                 .alias("__t_hd")).distinct(), on=keys)
+             .filter(F.col(cfg.hdiff) != F.col("__t_hd")))
+    bad = split.limit(1).collect()
+    if bad:
+        r = bad[0]
+        raise ValueError(
+            f"{cfg.name}: group ({r[0]}, {r[1]}) arrived split across "
+            f"micro-batches (stored group hashdiff differs from this "
+            f"batch's) — ma_sat streaming requires whole (hashkey, ldts) "
+            f"groups per batch")
+
+
 def micro_batch_loader(cfg: StreamIngestConfig, store: ParquetStore,
                        g: GlobalConfig = DEFAULT):
     """foreachBatch callback: stage the micro-batch, then run every
     configured entity load (incremental: anti-join vs current target,
-    insert-only append)."""
+    insert-only append).
+
+    Every load passes disable_hwm: file-arrival order is NOT ldts order,
+    so the high-water mark would drop late events; the builder's own
+    anti-join guarantees insert-only idempotence for hubs, links,
+    nh_links and nh_sats (each keyed by its hashkey, so a replay
+    inserts nothing).
+
+    sat_v0 per micro-batch: LAG dedup within the batch, then the
+    latest-vs-target compare drops an unchanged first row (reference:
+    macros/tables/databricks/sat_v0.sql:131-141). That compare alone is
+    NOT replay-safe — re-delivering a batch whose rows are already in
+    the target would re-insert every row except the last (its first row
+    no longer matches the post-batch latest) — so idempotence comes from
+    an additional (hashkey, ldts) anti-join: a satellite row's identity
+    IS its (parent, load timestamp). Micro-batches must arrive in ldts
+    order for LAG semantics to equal the one-shot batch load (the file
+    stream's per-file ordering gives this when files are
+    time-partitioned).
+
+    ma_sat per micro-batch: the GROUP hashdiff (LISTAGG over the
+    multi-active key) is computed within the batch, the
+    latest-vs-target compare drops unchanged groups, and the same
+    (hk, ldts) anti-join as sat_v0 makes re-delivery a no-op — a
+    group's identity is (parent, load timestamp). CONTRACT (stronger
+    than sat_v0's ldts ordering): every (parent_hashkey, ldts) group
+    must arrive WHOLE in one micro-batch — the group hashdiff is a
+    function of all the group's rows, so a split group would store a
+    partial hashdiff and the anti-join would silently drop the rest.
+    Time-partitioned source files give this for free (a load
+    timestamp's rows live in that load's files); _require_whole_groups
+    turns a violation into a loud error instead of a silent row loss."""
+    # (entity configs, builder, identity keys after the parent hashkey
+    # for the replay-safety anti-join; none where the builder's own
+    # anti-join already is one)
+    loads = ((cfg.hubs, build_hub, ()), (cfg.links, build_link, ()),
+             (cfg.nh_links, build_nh_link, ()), (cfg.nh_sats, build_nh_sat, ()),
+             (cfg.sats, build_sat_v0, (g.ldts_alias,)),
+             (cfg.ma_sats, build_ma_sat_v0, (g.ldts_alias,)))
 
     def load(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
@@ -74,87 +132,18 @@ def micro_batch_loader(cfg: StreamIngestConfig, store: ParquetStore,
         staged = staged.localCheckpoint(eager=True)
         reg.spark_loaders[cfg.stage.name] = lambda _s: staged
 
-        for hub_cfg in cfg.hubs:
-            target = store.read(hub_cfg.name) if store.exists(hub_cfg.name) else None
-            new = build_hub(spark, reg, hub_cfg, g, target=target,
+        for configs, build, identity in loads:
+            for ecfg in configs:
+                target = (store.read(ecfg.name) if store.exists(ecfg.name)
+                          else None)
+                new = build(spark, reg, ecfg, g, target=target,
                             disable_hwm=True)
-            store.append(hub_cfg.name, new)
-        for link_cfg in cfg.links:
-            # same earliest-arrival + anti-join shape as hubs: a link row
-            # is keyed by its link hashkey, so replay inserts nothing
-            target = store.read(link_cfg.name) if store.exists(link_cfg.name) else None
-            new = build_link(spark, reg, link_cfg, g, target=target,
-                             disable_hwm=True)
-            store.append(link_cfg.name, new)
-        for nhl_cfg in cfg.nh_links:
-            target = store.read(nhl_cfg.name) if store.exists(nhl_cfg.name) else None
-            new = build_nh_link(spark, reg, nhl_cfg, g, target=target,
-                                disable_hwm=True)
-            store.append(nhl_cfg.name, new)
-        for sat_cfg in cfg.nh_sats:
-            target = store.read(sat_cfg.name) if store.exists(sat_cfg.name) else None
-            # disable_hwm: file-arrival order is NOT ldts order, so the
-            # high-water mark would drop late events; the anti-join alone
-            # guarantees insert-only idempotence (same for hubs above)
-            new = build_nh_sat(spark, reg, sat_cfg, g, target=target,
-                               disable_hwm=True)
-            store.append(sat_cfg.name, new)
-        for sat_cfg in cfg.sats:
-            target = store.read(sat_cfg.name) if store.exists(sat_cfg.name) else None
-            # sat_v0 per micro-batch: LAG dedup within the batch, then
-            # the latest-vs-target compare drops an unchanged first row
-            # (reference: macros/tables/databricks/sat_v0.sql:131-141).
-            # That compare alone is NOT replay-safe — re-delivering a
-            # batch whose rows are already in the target would re-insert
-            # every row except the last (its first row no longer matches
-            # the post-batch latest) — so idempotence comes from an
-            # additional (hashkey, ldts) anti-join: a satellite row's
-            # identity IS its (parent, load timestamp). Micro-batches
-            # must arrive in ldts order for LAG semantics to equal the
-            # one-shot batch load (the file stream's per-file ordering
-            # gives this when files are time-partitioned).
-            new = build_sat_v0(spark, reg, sat_cfg, g, target=target,
-                               disable_hwm=True)
-            new = anti_join_new(new, target,
-                                [sat_cfg.parent_hashkey, g.ldts_alias])
-            store.append(sat_cfg.name, new)
-        for ma_cfg in cfg.ma_sats:
-            target = store.read(ma_cfg.name) if store.exists(ma_cfg.name) else None
-            # ma_sat per micro-batch: the GROUP hashdiff (LISTAGG over
-            # the multi-active key) is computed within the batch, the
-            # latest-vs-target compare drops unchanged groups, and the
-            # same (hk, ldts) anti-join as sat_v0 makes re-delivery a
-            # no-op — a group's identity is (parent, load timestamp).
-            # CONTRACT (stronger than sat_v0's ldts ordering): every
-            # (parent_hashkey, ldts) group must arrive WHOLE in one
-            # micro-batch — the group hashdiff is a function of all
-            # the group's rows, so a split group would store a partial
-            # hashdiff and the anti-join would silently drop the rest.
-            # Time-partitioned source files give this for free (a load
-            # timestamp's rows live in that load's files); the guard
-            # below turns a violation into a loud error instead of a
-            # silent row loss.
-            new = build_ma_sat_v0(spark, reg, ma_cfg, g, target=target,
-                                  disable_hwm=True)
-            if target is not None:
-                keys = [ma_cfg.parent_hashkey, g.ldts_alias]
-                split = (new.select(*keys, ma_cfg.hdiff).distinct()
-                         .join(target.select(*keys, F.col(ma_cfg.hdiff)
-                                             .alias("__t_hd")).distinct(),
-                               on=keys)
-                         .filter(F.col(ma_cfg.hdiff) != F.col("__t_hd")))
-                bad = split.limit(1).collect()
-                if bad:
-                    r = bad[0]
-                    raise ValueError(
-                        f"{ma_cfg.name}: group ({r[0]}, {r[1]}) arrived "
-                        f"split across micro-batches (stored group "
-                        f"hashdiff differs from this batch's) — ma_sat "
-                        f"streaming requires whole (hashkey, ldts) "
-                        f"groups per batch")
-            new = anti_join_new(new, target,
-                                [ma_cfg.parent_hashkey, g.ldts_alias])
-            store.append(ma_cfg.name, new)
+                if build is build_ma_sat_v0 and target is not None:
+                    _require_whole_groups(new, target, ecfg, g)
+                if identity:
+                    new = anti_join_new(new, target,
+                                        [ecfg.parent_hashkey, *identity])
+                store.append(ecfg.name, new)
 
     return load
 

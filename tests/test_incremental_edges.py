@@ -1,7 +1,8 @@
 """Incremental edge cases the oracle gate cannot exercise (it only
 compares initial loads): reversion groups in multi-batch deltas,
-per-rsrc_static watermarks for late-added sources, NULL-safe DELETE,
-crash-recoverable overwrite, empty log_logic rejection."""
+per-rsrc_static watermarks for late-added sources, earliest-arrival
+ldts ties, NULL-safe DELETE, crash-recoverable overwrite, empty
+log_logic rejection."""
 
 import datetime
 
@@ -10,9 +11,11 @@ from pyspark.sql import functions as F
 
 from datavault4dbt_spark.context import DEFAULT, Registry
 from datavault4dbt_spark.operators.ref_entities import (
-    RefSatConfig, build_ref_sat_v0)
+    RefHubConfig, RefSatConfig, build_ref_hub, build_ref_sat_v0)
 from datavault4dbt_spark.operators.nh import NhLinkConfig, build_nh_link
-from datavault4dbt_spark.operators.hub import EntitySource
+from datavault4dbt_spark.operators.hub import (EntitySource, HubConfig,
+                                               build_hub)
+from datavault4dbt_spark.operators.link import LinkConfig, build_link
 from datavault4dbt_spark.plans.incremental import ParquetStore
 
 G = DEFAULT
@@ -49,29 +52,53 @@ def test_ref_sat_v0_keeps_reversion_group(spark):
     assert [(r.hd,) for r in out2.collect()] == [("B",)]
 
 
-def test_nh_link_rsrc_static_new_source_loads_history(spark):
-    """A newly added rsrc_static source whose transactions predate the
-    target's global HWM must still load (reference: nh_link.sql:61-100
-    per-source record-source lookup) — the global watermark belongs to
-    the OTHER sources."""
-    schema = ("lhk string, hk_a string, hk_b string, ldts timestamp, "
-              "rsrc string, pay double")
-    target = _df(spark, [("L1", "a1", "b1", TS(2026, 1, 1), "S1/x", 1.0)],
-                 schema)
+# the four builders of the earliest-arrival pattern, each over a stage
+# with key k: (builder, config for one EntitySource)
+EARLIEST_ARRIVAL = {
+    "hub": (build_hub, lambda sm: HubConfig("hub_x", "k", ("a",), (sm,))),
+    "link": (build_link,
+             lambda sm: LinkConfig("link_x", "k", ("a", "b"), (sm,))),
+    "nh_link": (build_nh_link, lambda sm: NhLinkConfig(
+        "nh_link_x", "k", ("a", "b"), ("pay",), (sm,),
+        source_is_single_batch=False)),
+    "ref_hub": (build_ref_hub,
+                lambda sm: RefHubConfig("ref_hub_x", ("k",), (sm,))),
+}
+STAGE = "k string, a string, b string, ldts timestamp, rsrc string, pay double"
+
+
+@pytest.mark.parametrize("kind", sorted(EARLIEST_ARRIVAL))
+def test_earliest_arrival_new_source_history_and_ldts_tie(spark, kind):
+    """A newly added rsrc_static source whose rows predate the target's
+    global HWM must still load (reference: hub.sql:44-131, nh_link.sql:
+    61-100 per-source record-source lookup) — the global watermark
+    belongs to the OTHER sources. Plus a hand-computed ldts tie."""
+    build, make_cfg = EARLIEST_ARRIVAL[kind]
+    target = _df(spark, [("K1", "a1", "b1", TS(2026, 1, 1), "S1/x", 1.0)],
+                 STAGE)
     # new source S2: history older than target's max ldts
-    s2 = _df(spark, [("L2", "a2", "b2", TS(2025, 6, 1), "S2/x", 2.0)], schema)
+    s2 = _df(spark, [("K2", "a2", "b2", TS(2025, 6, 1), "S2/x", 2.0)], STAGE)
     reg = Registry()
     reg.spark_loaders["stage_s2"] = lambda _s: s2
-    cfg = NhLinkConfig(
-        "nh_link_x", "lhk", ("hk_a", "hk_b"), ("pay",),
-        (EntitySource("stage_s2", rsrc_static="S2/%"),))
-    out = build_nh_link(spark, reg, cfg, G, target=target)
-    assert [r.lhk for r in out.collect()] == ["L2"]
+    cfg = make_cfg(EntitySource("stage_s2", rsrc_static="S2/%"))
+    out = build(spark, reg, cfg, G, target=target)
+    assert [r.k for r in out.collect()] == ["K2"]
     # sanity: WITHOUT rsrc_static the global HWM drops the history
-    cfg_plain = NhLinkConfig(
-        "nh_link_y", "lhk", ("hk_a", "hk_b"), ("pay",),
-        (EntitySource("stage_s2"),))
-    assert build_nh_link(spark, reg, cfg_plain, G, target=target).count() == 0
+    cfg_plain = make_cfg(EntitySource("stage_s2"))
+    assert build(spark, reg, cfg_plain, G, target=target).count() == 0
+
+    # two rows of one key at the same ldts, rsrc 'B' first in the input
+    # and 'A' second: the (ldts, rsrc) order keeps 'A' on the initial
+    # load; against a target that already holds the key (at an earlier
+    # ldts, so the HWM passes both rows) nothing is inserted
+    tie = _df(spark, [("K", "aB", "bB", TS(2025, 1, 1), "B", 1.0),
+                      ("K", "aA", "bA", TS(2025, 1, 1), "A", 2.0)], STAGE)
+    reg.spark_loaders["stage_tie"] = lambda _s: tie
+    cfg = make_cfg(EntitySource("stage_tie"))
+    rows = build(spark, reg, cfg, G).collect()
+    assert [(r.k, r.rsrc) for r in rows] == [("K", "A")]
+    held = _df(spark, [("K", "a0", "b0", TS(2024, 1, 1), "A", 0.0)], STAGE)
+    assert build(spark, reg, cfg, G, target=held).count() == 0
 
 
 def test_delete_where_null_condition_keeps_row(spark, tmp_path):
