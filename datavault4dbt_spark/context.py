@@ -212,6 +212,10 @@ class Registry:
     source_bytes: int = 0
     # per-name contribution to source_bytes (re-registration replaces)
     _source_bytes_by_name: dict = field(default_factory=dict)
+    # name -> path of each register_parquet source: run_pipeline's
+    # input key stamps its files. A register() loader has no entry, so
+    # what it reads is unknown to the key.
+    source_paths: dict = field(default_factory=dict)
     _df_cache: dict = field(default_factory=dict)
     # loads may race when a DAG scheduler builds entities from threads
     # (plans/replay.py, operators/bundle.py): without the lock two
@@ -229,6 +233,7 @@ class Registry:
         self.spark_loaders[name] = \
             lambda spark, p=path: _read_source_parquet(spark, p)
         self.duckdb_relations[name] = duckdb_relation or name
+        self.source_paths[name] = path
         # Scale witness for size-gated plan choices (bundle union
         # split): total on-disk bytes of the registered sources. Local
         # paths only — a non-stat-able path leaves the total unchanged
@@ -255,6 +260,7 @@ class Registry:
         self._invalidate(name)
         self.spark_loaders[name] = loader
         self.duckdb_relations[name] = duckdb_sql
+        self.source_paths.pop(name, None)
 
     def _invalidate(self, name: str):
         """Drop a cached plan when its definition changes: a cached scan

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..context import GlobalConfig, DEFAULT  # noqa: F401 (interface parity)
-from .incremental import ParquetStore
+from .incremental import ParquetStore, listing_token
 
 
 def delta_available() -> bool:
@@ -87,6 +87,12 @@ class DeltaStore(ParquetStore):
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.format("delta").load(self.path(name))
+
+    def listing(self, name: str) -> str | None:
+        """Token of the table's transaction log: every commit (an empty
+        append too) adds a log file and so changes it."""
+        import os
+        return listing_token(os.path.join(self.path(name), "_delta_log"))
 
     def append(self, name: str, df: DataFrame, partition_by: tuple = ()):
         w = df.write.format("delta").mode("append")

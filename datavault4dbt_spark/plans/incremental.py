@@ -198,6 +198,44 @@ def anti_join_new(candidates: DataFrame, target: DataFrame | None,
     return candidates.join(target.select(*keys).distinct(), on=keys, how="left_anti")
 
 
+def file_stamps(path: str, data_only: bool = False):
+    """Sorted ``(relpath, size, mtime_ns, ctime_ns, ino)`` of every file
+    under ``path`` (of ``path`` itself when it is a file), or None when
+    it cannot be stat'ed. ``data_only`` skips what Spark's file reader
+    skips: names starting with ``_`` or ``.`` (``_SUCCESS``, checksum
+    files, the store's key file)."""
+    import os
+
+    def stamp(p, rel):
+        st = os.stat(p)
+        return (rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+
+    hidden = ("_", ".")
+    try:
+        if not os.path.isdir(path):
+            return (stamp(path, ""),)
+        out = []
+        for base, dirs, files in os.walk(path):
+            if data_only:
+                dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+                files = [f for f in files if not f.startswith(hidden)]
+            for f in files:
+                p = os.path.join(base, f)
+                out.append(stamp(p, os.path.relpath(p, path)))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def listing_token(path: str) -> str | None:
+    """sha256 of the data-file stamps under ``path``; None if absent."""
+    import hashlib
+
+    stamps = file_stamps(path, data_only=True)
+    return (None if stamps is None
+            else hashlib.sha256(repr(stamps).encode()).hexdigest())
+
+
 class StoreRecoveryNeeded(RuntimeError):
     """A store table is in `overwrite`'s crash window (final missing,
     committed copy parked under the `__old` marker). Reads refuse to
@@ -221,6 +259,10 @@ class ParquetStore:
     # delete_where cannot report rows deleted without extra scans here;
     # DeltaStore flips this and returns the commit's numDeletedRows.
     DELETE_RETURNS_METRICS = False
+    # run_pipeline's input key, one file per table directory, written
+    # after each successful write. Spark's reader skips '_' files, and
+    # overwrite's directory swap drops it together with the old copy.
+    KEY_FILE = "_input_key.json"
 
     def __init__(self, spark, root: str):
         self.spark = spark
@@ -275,6 +317,41 @@ class ParquetStore:
             os.rename(old, final)
         shutil.rmtree(final + ".__tmp__", ignore_errors=True)
 
+    def listing(self, name: str) -> str | None:
+        """Token of the table's committed data files (None when there is
+        no table): any write that lands or removes a file changes it."""
+        return listing_token(self.path(name))
+
+    def recorded_key(self, name: str) -> str | None:
+        """The input key recorded at the table's last write, or None
+        when there is none or a write has changed the table since (the
+        record carries the listing it was written against)."""
+        import json
+        import os
+
+        try:
+            with open(os.path.join(self.path(name), self.KEY_FILE)) as f:
+                rec = json.load(f)
+        except (OSError, ValueError):
+            return None
+        return rec["key"] if rec["listing"] == self.listing(name) else None
+
+    def record_key(self, name: str, key: str | None):
+        """Record ``key`` against the table's current listing; None
+        drops any recorded key."""
+        import json
+        import os
+
+        path = os.path.join(self.path(name), self.KEY_FILE)
+        if key is None:
+            if os.path.exists(path):
+                os.remove(path)
+            return
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"key": key, "listing": self.listing(name)}, f)
+        os.replace(tmp, path)
+
     def read(self, name: str) -> DataFrame:
         self._check_recovered(name)
         sch = self._known_schemas.get(name)
@@ -296,8 +373,15 @@ class ParquetStore:
         unchecked append there would create a fresh table holding only
         the new rows, which MASKS the recovery state (the final path
         exists again) and permanently strands the committed history in
-        `.__old__` — repair() restores only while final is missing."""
+        `.__old__` — repair() restores only while final is missing.
+
+        An append to a table that already holds data files lands no
+        zero-row file: those the write left are deleted (found from the
+        new files' parquet footers, no Spark job), so an append of
+        nothing leaves the table's file set, and its ``listing``, as it
+        was. A first write keeps its schema-carrying file."""
         self._check_recovered(name)
+        before = file_stamps(self.path(name), data_only=True) or ()
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -305,6 +389,27 @@ class ParquetStore:
         w.parquet(self.path(name))
         if not partition_by:
             self._known_schemas.setdefault(name, df.schema)
+        if before:
+            self._drop_empty_files(name, {s[0] for s in before})
+
+    def _drop_empty_files(self, name: str, before: set):
+        import os
+
+        import pyarrow.parquet as pq
+
+        root = self.path(name)
+        for rel, *_ in file_stamps(root, data_only=True) or ():
+            p = os.path.join(root, rel)
+            if (rel in before or not rel.endswith(".parquet")
+                    or pq.ParquetFile(p).metadata.num_rows):
+                continue
+            base, fn = os.path.split(p)
+            os.remove(p)
+            crc = os.path.join(base, f".{fn}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+            if base != root and not os.listdir(base):
+                os.rmdir(base)              # an emptied hive partition
 
     def partitions(self, name: str, col: str) -> dict:
         """Hive-style partition values present for ``col`` — read from

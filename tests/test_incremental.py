@@ -210,3 +210,27 @@ def test_store_known_schema_reads(spark, tmp_path):
         [(1, 0)], "k int, part int"), partition_by=("part",))
     assert "p" not in store._known_schemas
     assert sorted(store.read("p").columns) == ["k", "part"]
+
+
+def test_store_empty_appends_land_no_file(spark, tmp_path):
+    """An append of zero rows to an existing table leaves its file set
+    (and so its listing) unchanged; the table still reads with its
+    schema. A first write keeps its schema-carrying file."""
+    import os
+
+    store = ParquetStore(spark, str(tmp_path))
+    empty = spark.createDataFrame([], "k int, v string")
+    store.append("t", empty)
+    files = sorted(os.listdir(store.path("t")))
+    assert any(f.endswith(".parquet") for f in files)
+    store.append("t", spark.createDataFrame([(1, "a")], "k int, v string"))
+    files = sorted(os.listdir(store.path("t")))
+    listing = store.listing("t")
+    for _ in range(3):
+        store.append("t", empty)
+    assert sorted(os.listdir(store.path("t"))) == files
+    assert store.listing("t") == listing
+    fresh = ParquetStore(spark, str(tmp_path))      # no schema memo
+    got = fresh.read("t")
+    assert got.schema == empty.schema
+    assert [tuple(r) for r in got.collect()] == [(1, "a")]

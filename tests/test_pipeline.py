@@ -166,3 +166,263 @@ def test_run_pipeline_selective_subtree(spark, sf_dir, tmp_path):
     counts3 = run_pipeline(spark, _decls(), store, make_registry(sf_dir),
                            select="sat_customer_n0_s")
     assert counts3 == {"sat_customer_n0_s": 0}
+
+
+# -- input-key skip -------------------------------------------------------
+
+_INCREMENTAL = {"hub_customer", "link_customer_nation", "sat_customer_n0_s",
+                "pit_customer", "bridge_customer_nation"}
+
+
+def _example_sources(root):
+    """Private copies of the example project's two sources, so a test can
+    rewrite them."""
+    import shutil
+    root.mkdir()
+    paths = {}
+    for t in ("customer", "nation"):
+        paths[t] = str(root / f"{t}.parquet")
+        shutil.copy(f"{SF_DIR}/{t}.parquet", paths[t])
+    return paths
+
+
+def _parquet_registry(paths):
+    from datavault4dbt_spark.context import Registry
+    reg = Registry()
+    for name, path in paths.items():
+        reg.register_parquet(name, path)
+    return reg
+
+
+def _rewrite(path):
+    """Rewrite a file in place with the same bytes (same size and
+    inode, later mtime)."""
+    import time
+    with open(path, "rb") as f:
+        data = f.read()
+    time.sleep(0.05)
+    with open(path, "wb") as f:
+        f.write(data)
+
+
+def _counted(decls, calls):
+    """decls whose builders append their entity name to ``calls``."""
+    import dataclasses
+
+    def wrap(name, fn):
+        def build(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+        return build
+    return {n: dataclasses.replace(d, build=wrap(n, d.build))
+            for n, d in decls.items()}
+
+
+class _Vault:
+    """The example project over private sources, with builder calls
+    counted: ``run()`` returns the incremental entities it built."""
+
+    def __init__(self, spark, root, paths=None):
+        from datavault4dbt_spark.plans.project import load_project
+        fixtures.ensure_session_conf(spark)
+        self.spark = spark
+        self.paths = paths or _example_sources(root / "src")
+        self.calls: list = []
+        self.decls = _counted(load_project("examples/project"), self.calls)
+        self.store = ParquetStore(spark, str(root / "wh"))
+
+    def run(self, reg=None, **kw):
+        self.calls.clear()
+        self.counts = run_pipeline(self.spark, self.decls, self.store,
+                                   reg or _parquet_registry(self.paths),
+                                   **kw)
+        return set(self.calls) & _INCREMENTAL
+
+    def listing(self):
+        return {n: self.store.listing(n) for n in _INCREMENTAL}
+
+    def rows(self, name):
+        return sorted(map(str, self.store.read(name).collect()))
+
+    def set_cfg(self, name, **changes):
+        import dataclasses
+        d = self.decls[name]
+        self.decls[name] = dataclasses.replace(
+            d, cfg=dataclasses.replace(d.cfg, **changes))
+
+
+def test_rerun_skips_and_each_change_reruns_its_closure(spark, tmp_path):
+    v = _Vault(spark, tmp_path)
+    assert v.run() == _INCREMENTAL
+    before = v.listing()
+    # nothing changed: no incremental builder runs, no file lands
+    assert v.run() == set()
+    assert all(v.counts[n] == 0 for n in _INCREMENTAL)
+    assert v.listing() == before
+    assert v.counts["vault_checks"] == 6        # tables still rebuild
+
+    # one entity's config: the snapshot view feeds only pit and bridge
+    v.set_cfg("control_snap_v1", current_ts="2024-02-02 00:00:00")
+    assert v.run() == {"pit_customer", "bridge_customer_nation"}
+    assert v.run() == set()
+
+    # one source file rewritten at the same size: the stage view's
+    # consumers rerun; they append nothing, so pit and bridge skip
+    _rewrite(v.paths["nation"])
+    assert v.run() == {"hub_customer", "link_customer_nation",
+                       "sat_customer_n0_s"}
+    assert v.run() == set()
+
+    # an external append to one upstream table: it and its consumers
+    hub = v.store.read("hub_customer")
+    v.store.append("hub_customer", spark.createDataFrame(
+        hub.limit(1).collect(), hub.schema))
+    assert v.run() == {"hub_customer", "pit_customer",
+                       "bridge_customer_nation"}
+    assert v.run() == set()
+
+
+def test_unknowable_inputs_never_skip(spark, tmp_path):
+    import os
+
+    v = _Vault(spark, tmp_path)
+    v.set_cfg("control_snap_v1", current_ts=None)
+    v.run()
+    # snap_v1 reads "now": pit and bridge rerun and keep no key
+    assert v.run() == {"pit_customer", "bridge_customer_nation"}
+    assert not os.path.exists(os.path.join(v.store.path("pit_customer"),
+                                           ParquetStore.KEY_FILE))
+
+    # a loader source is unknown to the key: its consumers always rerun
+    v.set_cfg("control_snap_v1", current_ts="2024-02-01 00:00:00")
+    reg = _parquet_registry(v.paths)
+    reg.register("nation", lambda s, p=v.paths["nation"]: s.read.parquet(p),
+                 "nation")
+    v.run(reg=reg)
+    assert v.run(reg=reg) == {"hub_customer", "link_customer_nation",
+                              "sat_customer_n0_s"}
+
+
+def test_builder_reading_outside_its_deps_never_skips(spark, sf_dir,
+                                                     tmp_path):
+    # _decls()'s stage_customer declares no deps but reads customer and
+    # nation: the key would not see them change, so nothing downstream
+    # of it may skip
+    fixtures.ensure_session_conf(spark)
+    calls: list = []
+    decls = _counted(_decls(), calls)
+    store = ParquetStore(spark, str(tmp_path))
+    paths = {t: f"{sf_dir}/{t}.parquet" for t in ("customer", "nation")}
+    for _ in range(2):
+        calls.clear()
+        run_pipeline(spark, decls, store, _parquet_registry(paths))
+        assert "hub_customer" in calls
+    assert store.recorded_key("stage_customer") is None
+
+
+def test_input_key_refuses_clock_reads_and_unstable_values(sf_dir,
+                                                           tmp_path):
+    import dataclasses
+
+    from datavault4dbt_spark.plans.pipeline import input_keys
+    from datavault4dbt_spark.plans.project import load_project
+
+    decls = load_project("examples/project")
+    reg = _parquet_registry({t: f"{sf_dir}/{t}.parquet"
+                             for t in ("customer", "nation")})
+    store = ParquetStore(None, str(tmp_path))
+    assert input_keys(decls, store, reg)("hub_customer") is not None
+    stage = decls["stage_customer"]
+    for ldts in ("current_timestamp()", "CURRENT_DATE - INTERVAL 1 DAY",
+                 lambda: "2024-01-01"):
+        changed = {**decls, "stage_customer": dataclasses.replace(
+            stage, cfg=dataclasses.replace(stage.cfg, ldts=ldts))}
+        key = input_keys(changed, store, reg)
+        assert key("stage_customer") is None, ldts
+        assert key("hub_customer") is None, ldts
+
+
+def test_excluded_table_dependency_contributes_recorded_key(spark, tmp_path):
+    v = _Vault(spark, tmp_path)
+    v.run()
+    v.set_cfg("control_snap_v0", end_date="2024-01-30")
+    # excluded: its stored table and recorded key stand, so consumers
+    # skip although its live config changed
+    assert v.run(exclude="control_snap_v0") == set()
+    # rebuilt: the new key reaches pit and bridge
+    assert v.run() == {"pit_customer", "bridge_customer_nation"}
+
+
+def test_kill_between_data_write_and_key_write(spark, tmp_path):
+    """A run killed after a successful write but before its key write
+    (an append, then an overwrite) converges to a clean load."""
+    v = _Vault(spark, tmp_path)
+    v.run()
+    _rewrite(v.paths["customer"])       # hub must really run next
+    real, killed = v.store.record_key, []
+
+    def record_key(name, key):
+        if name in ("hub_customer", "control_snap_v0") and name not in killed:
+            killed.append(name)
+            raise OSError(f"killed before {name}'s key write")
+        return real(name, key)
+    v.store.record_key = record_key
+    with pytest.raises(OSError, match="hub_customer"):
+        v.run()
+    hub = v.store.listing("hub_customer")
+    # hub's recorded key is stale: it runs again and appends nothing
+    with pytest.raises(OSError, match="control_snap_v0"):
+        v.run()
+    assert "hub_customer" in v.calls
+    assert v.store.listing("hub_customer") == hub
+    v.run()
+    clean = _Vault(spark, tmp_path / "clean", paths=v.paths)
+    clean.run()
+    for name in _INCREMENTAL | {"control_snap_v0", "vault_checks"}:
+        assert v.rows(name) == clean.rows(name), name
+    assert v.run() == set()
+
+
+_KEYS_SCRIPT = """
+import json, sys
+from datavault4dbt_spark.plans.incremental import ParquetStore
+from datavault4dbt_spark.plans.pipeline import input_keys
+from datavault4dbt_spark.plans.project import load_project
+from datavault4dbt_spark.context import Registry
+reg = Registry()
+for name, path in json.loads(sys.argv[2]).items():
+    reg.register_parquet(name, path)
+decls = load_project("examples/project")
+key = input_keys(decls, ParquetStore(None, sys.argv[1]), reg)
+print(json.dumps({n: key(n) for n in sorted(decls)}))
+"""
+
+
+def test_input_keys_are_deterministic(spark, tmp_path):
+    """Two parses and two interpreters with different hash seeds agree
+    on every key: no hash(), id() or address-bearing repr enters it."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from datavault4dbt_spark.plans.pipeline import input_keys
+    from datavault4dbt_spark.plans.project import load_project
+
+    v = _Vault(spark, tmp_path)
+    v.decls = load_project("examples/project")
+    v.run()
+    keys = [input_keys(load_project("examples/project"), v.store,
+                       _parquet_registry(v.paths)) for _ in range(2)]
+    want = {n: keys[0](n) for n in sorted(v.decls)}
+    assert want == {n: keys[1](n) for n in sorted(v.decls)}
+    assert want["hub_customer"] == v.store.recorded_key("hub_customer")
+    assert want["pit_customer"] == v.store.recorded_key("pit_customer")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for seed in ("1", "2"):
+        out = subprocess.run(
+            [sys.executable, "-c", _KEYS_SCRIPT, v.store.root,
+             json.dumps(v.paths)], cwd=repo, capture_output=True,
+            text=True, check=True,
+            env={**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": repo})
+        assert json.loads(out.stdout.strip().splitlines()[-1]) == want

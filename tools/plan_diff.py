@@ -11,6 +11,13 @@ Normalized before comparing:
   - RDD ids (``MapPartitionsRDD[2280]`` -> ``MapPartitionsRDD[N]``)
   - the random 8-character suffix ``tempfile.mkdtemp`` appends to a
     scratch directory under the temp root.
+  - the column list of each distinct-aggregate ``Expand``: Spark's
+    distinct rewrite orders and numbers its distinct groups differently
+    from run to run, and that order shows in every line that carries
+    its ``gid`` column (the Expand's projections, then the Input, Keys,
+    Results, sort and partitioning lists and the ``gid = k`` filters
+    above it). Such a line compares as a multiset of its tokens, so the
+    same columns in another order count as identical.
 
 Prints the name of every plan that differs or exists on one side only
 (with ``--diff``, also the unified diff of the normalized text). Exit
@@ -36,10 +43,17 @@ _RULES = (
 )
 
 
+_GID = re.compile(r"\bgid#N\b")
+_TOKEN_SEP = re.compile(r"[\s,\[\]()]+")
+
+
 def normalize(text: str) -> str:
     for pattern, repl in _RULES:
         text = pattern.sub(repl, text)
-    return text
+    return "\n".join(
+        " ".join(sorted(filter(None, _TOKEN_SEP.split(line))))
+        if _GID.search(line) else line
+        for line in text.split("\n"))
 
 
 def _read(path: str) -> str:
