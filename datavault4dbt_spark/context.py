@@ -352,13 +352,22 @@ def _read_source_parquet(spark, path: str):
     return spark.read.schema(sch).parquet(path)
 
 
+# The driver's raw testdata tables (TESTDATA.md) -> their DuckDB
+# relation: the driver pre-registers each table as a view of that name
+# (events.ts is cast as testdata_registry describes).
+TESTDATA_DUCKDB = {
+    **{t: t for t in ("region", "nation", "customer", "supplier", "part",
+                      "orders", "lineitem", "documents", "embeddings")},
+    "events": "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)",
+}
+
+
 def testdata_registry(sf_dir: str) -> Registry:
     """Registry over the driver's parquet testdata (TESTDATA.md)."""
     reg = Registry()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents", "embeddings"):
-        # DuckDB side: the driver pre-registers each table as a view.
-        reg.register_parquet(t, f"{sf_dir}/{t}.parquet", t)
+    for t, rel in TESTDATA_DUCKDB.items():
+        if t != "events":
+            reg.register_parquet(t, f"{sf_dir}/{t}.parquet", rel)
 
     # events.ts is parquet TIMESTAMP(NANOS): Spark reads it as LONG nanos
     # (requires spark.sql.legacy.parquet.nanosAsLong=true) -> truncate to
@@ -371,18 +380,22 @@ def testdata_registry(sf_dir: str) -> Registry:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
 
-    reg.register(
-        "events", _events,
-        "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)")
+    reg.register("events", _events, TESTDATA_DUCKDB["events"])
     return reg
 
 
+# Session options the engine relies on: UTC session time, AQE, and
+# parquet TIMESTAMP(NANOS) read as LONG (events.ts).
+SESSION_CONFS = (("spark.sql.session.timeZone", "UTC"),
+                 ("spark.sql.adaptive.enabled", "true"),
+                 ("spark.sql.legacy.parquet.nanosAsLong", "true"))
+
+
 def configure_session_builder(builder):
-    """Session options the engine relies on (UTC, AQE, nanos handling)."""
-    return (builder
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
+    """``SESSION_CONFS`` on a SparkSession builder."""
+    for k, v in SESSION_CONFS:
+        builder = builder.config(k, v)
+    return builder
 
 
 # Estimated input bytes below which ensure_min_parallelism skips the

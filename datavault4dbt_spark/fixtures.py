@@ -13,147 +13,102 @@ are exercised by construction.
 
 from __future__ import annotations
 
-from .context import DEFAULT, Registry, testdata_registry
+from .context import (DEFAULT, SESSION_CONFS, TESTDATA_DUCKDB, Registry,
+                      testdata_registry)
 from .functions.hashing import HashSpec
 from .operators.stage import (StageConfig, DerivedColumn, Prejoin,
-                              MultiActiveConfig, build_stage, stage_oracle)
-from .operators.hub import HubConfig, EntitySource, build_hub, hub_oracle
-from .operators.link import LinkConfig, build_link, link_oracle
-from .operators.sat import (SatConfig, SatV1Config, build_sat_v0, build_sat_v1,
-                            sat_v0_oracle, sat_v1_oracle)
-from .operators.nh import (NhSatConfig, NhLinkConfig, build_nh_sat, build_nh_link,
-                           nh_sat_oracle, nh_link_oracle)
-from .operators.ma_sat import (MaSatConfig, MaSatV1Config, build_ma_sat_v0,
-                               build_ma_sat_v1, ma_sat_v0_oracle, ma_sat_v1_oracle)
-from .operators.rec_track import (RecTrackConfig, build_rec_track_sat,
-                                  rec_track_oracle)
-from .operators.eff_sat import EffSatConfig, build_eff_sat_v0, eff_sat_v0_oracle
-from .operators.ref_entities import (
-    RefHubConfig, RefSatConfig, RefSatV1Config, RefTableConfig,
-    build_ref_hub, build_ref_sat_v0, build_ref_sat_v1, build_ref_table,
-    ref_hub_oracle, ref_sat_v0_oracle, ref_sat_v1_oracle, ref_table_oracle)
+                              MultiActiveConfig, stage_oracle)
+from .operators.hub import HubConfig, EntitySource, hub_oracle
+from .operators.link import LinkConfig, link_oracle
+from .operators.sat import SatConfig, SatV1Config, sat_v0_oracle, sat_v1_oracle
+from .operators.nh import (NhSatConfig, NhLinkConfig, nh_sat_oracle,
+                           nh_link_oracle)
+from .operators.ma_sat import (MaSatConfig, MaSatV1Config, ma_sat_v0_oracle,
+                               ma_sat_v1_oracle)
+from .operators.rec_track import RecTrackConfig, rec_track_oracle
+from .operators.eff_sat import EffSatConfig, eff_sat_v0_oracle
+from .operators.ref_entities import (RefHubConfig, RefSatConfig,
+                                     RefSatV1Config, RefTableConfig,
+                                     ref_hub_oracle, ref_sat_v0_oracle,
+                                     ref_sat_v1_oracle, ref_table_oracle)
 from .operators.snapshots import (SnapV0Config, SnapV1Config, LogLogic,
-                                  build_snap_v0, build_snap_v1,
                                   snap_v0_oracle, snap_v1_oracle)
-from .operators.pit import PitConfig, build_pit, pit_oracle
-from .operators.bridge import (BridgeConfig, BridgeLeg, build_bridge,
-                               bridge_oracle)
-from .operators.linkage import (BlockedLinkageConfig, build_blocked_linkage,
-                                blocked_linkage_oracle)
-from .operators.basket import (CooccurrenceConfig, build_cooccurrence,
-                               cooccurrence_oracle)
+from .operators.pit import PitConfig, pit_oracle
+from .operators.bridge import BridgeConfig, BridgeLeg, bridge_oracle
+from .operators.linkage import BlockedLinkageConfig, blocked_linkage_oracle
+from .operators.basket import CooccurrenceConfig, cooccurrence_oracle
 from .operators.bundle import (BundleConfig, BundleMember, build_bundle,
                                bundle_oracle, UnionBundleConfig,
                                build_union_bundle, union_bundle_oracle)
 from .plans.replay import (ReplayConfig, ReplayMember, run_replay,
                            replay_oracle)
-from .llm.dedup import (
-    ExactDedupConfig, MinHashLshConfig, SimHashConfig, NgramJaccardConfig,
-    EmbeddingCosineConfig, DupGroupsConfig, build_exact_dedup,
-    build_minhash_lsh, build_simhash_dedup, build_ngram_jaccard,
-    build_embedding_cosine, build_dup_groups, exact_dedup_oracle,
-    minhash_lsh_oracle, simhash_dedup_oracle, ngram_jaccard_oracle,
-    embedding_cosine_oracle, dup_groups_oracle)
-from .llm.contamination import (ContaminationConfig, build_contamination,
-                                contamination_oracle,
+from .llm.dedup import (ExactDedupConfig, MinHashLshConfig, SimHashConfig,
+                        NgramJaccardConfig, EmbeddingCosineConfig,
+                        DupGroupsConfig, exact_dedup_oracle,
+                        minhash_lsh_oracle, simhash_dedup_oracle,
+                        ngram_jaccard_oracle, embedding_cosine_oracle,
+                        dup_groups_oracle)
+from .llm.contamination import (ContaminationConfig, contamination_oracle,
                                 contamination_gate_oracle,
                                 build_decontaminated)
-from .llm.similarity import (AnnConfig, build_ann_topk, ann_topk_oracle,
-                             IvfConfig, build_ann_ivf, ann_ivf_oracle)
-from .llm.textstats import (
-    LangIdConfig, QualityConfig, TokenCountConfig, FingerprintConfig,
-    build_langid, build_quality, build_token_count, build_fingerprint,
-    langid_oracle, quality_oracle, token_count_oracle, fingerprint_oracle)
+from .llm.similarity import (AnnConfig, ann_topk_oracle, IvfConfig,
+                             ann_ivf_oracle)
+from .llm.textstats import (LangIdConfig, QualityConfig, TokenCountConfig,
+                            FingerprintConfig, langid_oracle, quality_oracle,
+                            token_count_oracle, fingerprint_oracle)
 from .llm.multimodal import (MultimodalConfig, MultimodalDecodeConfig,
-                             build_multimodal_features,
-                             build_multimodal_decode, multimodal_oracle,
-                             multimodal_decode_oracle,
+                             multimodal_oracle, multimodal_decode_oracle,
                              MultimodalFrameSampleConfig,
-                             build_multimodal_framesample,
                              multimodal_framesample_oracle,
-                             MultimodalResizeConfig,
-                             build_multimodal_resize,
-                             multimodal_resize_oracle,
-                             WavDecodeConfig, build_wav_decode,
-                             wav_decode_oracle,
-                             WavStatsConfig, build_wav_stats,
-                             wav_stats_oracle,
-                             UlawStatsConfig, build_ulaw_stats,
-                             ulaw_stats_oracle,
-                             PngDecodeConfig, build_png_decode,
-                             png_decode_oracle,
-                             GifFramesConfig, build_gif_frames,
+                             MultimodalResizeConfig, multimodal_resize_oracle,
+                             WavDecodeConfig, wav_decode_oracle,
+                             WavStatsConfig, wav_stats_oracle, UlawStatsConfig,
+                             ulaw_stats_oracle, PngDecodeConfig,
+                             png_decode_oracle, GifFramesConfig,
                              gif_frames_oracle)
-from .llm.scrub import (RepetitionConfig, PiiRedactConfig, build_repetition,
-                        build_pii_redact, repetition_oracle, pii_redact_oracle)
+from .llm.scrub import (RepetitionConfig, PiiRedactConfig, repetition_oracle,
+                        pii_redact_oracle)
 from .llm.sampling import (DatasetMixConfig, SequencePackingConfig,
-                           PackingManifestConfig, build_dataset_mix,
-                           build_sequence_packing, build_packing_manifest,
-                           dataset_mix_oracle, sequence_packing_oracle,
-                           packing_manifest_oracle, CorpusShuffleConfig,
-                           build_corpus_shuffle, corpus_shuffle_oracle,
-                           TemperatureMixConfig, build_temperature_mix,
-                           temperature_mix_oracle,
+                           PackingManifestConfig, dataset_mix_oracle,
+                           sequence_packing_oracle, packing_manifest_oracle,
+                           CorpusShuffleConfig, corpus_shuffle_oracle,
+                           TemperatureMixConfig, temperature_mix_oracle,
                            TemperatureResampleConfig,
                            build_temperature_resample,
-                           temperature_resample_oracle,
-                           ExactSampleConfig, build_exact_sample,
-                           exact_sample_oracle,
-                           ProportionalSampleConfig,
-                           build_proportional_sample,
+                           temperature_resample_oracle, ExactSampleConfig,
+                           exact_sample_oracle, ProportionalSampleConfig,
                            proportional_sample_oracle)
-from .llm.annindex import (AnnIndexConfig, build_ann_index_persisted,
-                           ann_index_persisted_oracle)
-from .llm.semdedup import SemDedupConfig, build_semdedup, semdedup_oracle
-from .llm.quantize import (ScalarQuantizeConfig, build_scalar_quantize,
-                           scalar_quantize_oracle)
-from .llm.substring import (SubstringDupConfig, build_substring_dup,
-                            substring_dup_oracle)
-from .llm.tfidf import TfidfConfig, build_tfidf, tfidf_oracle
+from .llm.annindex import AnnIndexConfig, ann_index_persisted_oracle
+from .llm.semdedup import SemDedupConfig, semdedup_oracle
+from .llm.quantize import ScalarQuantizeConfig, scalar_quantize_oracle
+from .llm.substring import SubstringDupConfig, substring_dup_oracle
+from .llm.tfidf import TfidfConfig, tfidf_oracle
 from .llm.sources import (SourceStatsConfig, SourceGateConfig,
-                          build_source_stats, build_source_gate,
                           source_stats_oracle, source_gate_oracle,
-                          TokenBudgetConfig, build_token_budget,
-                          token_budget_oracle)
+                          TokenBudgetConfig, token_budget_oracle)
 from .llm.chunking import (ChunkConfig, ChunkDedupConfig, ChunkScrubConfig,
-                           build_doc_chunks, build_chunk_dedup,
-                           build_chunk_scrub, doc_chunks_oracle,
-                           chunk_dedup_oracle, chunk_scrub_oracle)
-from .llm.lm import (BigramLmConfig, build_lm_score, lm_score_oracle,
-                     CcnetBucketsConfig, build_ccnet_buckets,
+                           doc_chunks_oracle, chunk_dedup_oracle,
+                           chunk_scrub_oracle)
+from .llm.lm import (BigramLmConfig, lm_score_oracle, CcnetBucketsConfig,
                      ccnet_buckets_oracle)
-from .llm.vocab import (VocabTopkConfig, build_vocab_topk,
-                        vocab_topk_oracle,
-                        GroupedVocabConfig, build_grouped_vocab,
+from .llm.vocab import (VocabTopkConfig, vocab_topk_oracle, GroupedVocabConfig,
                         grouped_vocab_oracle)
-from .llm.overlap import (SourceOverlapConfig, build_source_overlap,
-                          source_overlap_oracle)
-from .llm.gopher import (GopherRulesConfig, build_gopher_rules,
-                         gopher_rules_oracle)
-from .llm.boilerplate import (BoilerplateConfig,
-                              build_boilerplate_removal,
-                              boilerplate_removal_oracle)
-from .llm.dsir import DsirConfig, build_dsir_score, dsir_score_oracle
+from .llm.overlap import SourceOverlapConfig, source_overlap_oracle
+from .llm.gopher import GopherRulesConfig, gopher_rules_oracle
+from .llm.boilerplate import BoilerplateConfig, boilerplate_removal_oracle
+from .llm.dsir import DsirConfig, dsir_score_oracle
 from .llm.classifier import (QualityClassifierConfig,
                              build_quality_classifier,
                              quality_classifier_oracle)
-from .llm.profile import (ProfileConfig, build_dataset_profile,
-                          dataset_profile_oracle,
-                          GroupedQuantilesConfig, build_grouped_quantiles,
-                          grouped_quantiles_oracle,
-                          HeavyHittersConfig, build_heavy_hitters,
-                          heavy_hitters_oracle,
-                          HistogramConfig, build_histogram,
-                          histogram_oracle,
-                          SufficientStatsConfig, build_sufficient_stats,
-                          sufficient_stats_oracle)
-from .llm.lineclean import (LineCleanConfig, build_line_clean,
-                            line_clean_oracle)
-from .llm.curation import (CurationConfig, DedupReportConfig,
-                           build_curation, build_dedup_report,
-                           curation_oracle, dedup_report_oracle)
-from .llm.incdedup import (IncrementalDedupConfig, build_incremental_dedup,
-                           incremental_dedup_oracle)
+from .llm.profile import (ProfileConfig, dataset_profile_oracle,
+                          GroupedQuantilesConfig, grouped_quantiles_oracle,
+                          HeavyHittersConfig, heavy_hitters_oracle,
+                          HistogramConfig, histogram_oracle,
+                          SufficientStatsConfig, sufficient_stats_oracle)
+from .llm.lineclean import LineCleanConfig, line_clean_oracle
+from .llm.curation import (CurationConfig, DedupReportConfig, curation_oracle,
+                           dedup_report_oracle)
+from .llm.incdedup import IncrementalDedupConfig, incremental_dedup_oracle
 from .streaming.incdedup import (StreamingDedupEntityConfig,
                                  build_streaming_incremental_dedup,
                                  streaming_incremental_dedup_oracle)
@@ -178,78 +133,46 @@ from .streaming.dropdup import (StreamingDropDupEntityConfig,
 from .operators.maintenance import (PitCleanupConfig, build_pit_cleanup,
                                     pit_cleanup_oracle)
 from .llm.selection import (CanonicalConfig, StratifiedSplitConfig,
-                            SourceCapConfig, build_canonical_selection,
-                            build_stratified_split, build_source_cap,
-                            canonical_selection_oracle,
+                            SourceCapConfig, canonical_selection_oracle,
                             stratified_split_oracle, source_cap_oracle,
-                            QuantileGateConfig, build_quantile_gate,
-                            quantile_gate_oracle,
-                            PercentileRankConfig, build_percentile_rank,
-                            percentile_rank_oracle,
-                            KFoldConfig, build_kfold, kfold_oracle)
-from .operators.asof import (AsofJoinConfig, build_asof_join,
-                             asof_join_oracle)
+                            QuantileGateConfig, quantile_gate_oracle,
+                            PercentileRankConfig, percentile_rank_oracle,
+                            KFoldConfig, kfold_oracle)
+from .operators.asof import AsofJoinConfig, asof_join_oracle
 from .operators.events import (SessionizeConfig, HoppingAggConfig,
-                               build_sessionize, build_hopping_agg,
                                sessionize_oracle, hopping_agg_oracle,
-                               FunnelConfig, build_funnel, funnel_oracle,
-                               CohortRetentionConfig,
-                               build_cohort_retention,
-                               cohort_retention_oracle,
+                               FunnelConfig, funnel_oracle,
+                               CohortRetentionConfig, cohort_retention_oracle,
                                TransitionMatrixConfig,
-                               build_transition_matrix,
-                               transition_matrix_oracle,
-                               LocfConfig, build_locf, locf_oracle,
-                               RollingAggConfig, build_rolling_agg,
-                               rolling_agg_oracle,
-                               OhlcBarsConfig, build_ohlc_bars,
-                               ohlc_bars_oracle,
-                               AttributionConfig, build_attribution,
-                               attribution_oracle,
-                               ConversionPathConfig,
-                               build_conversion_paths,
-                               conversion_paths_oracle,
-                               ActiveUsersConfig, build_active_users,
+                               transition_matrix_oracle, LocfConfig,
+                               locf_oracle, RollingAggConfig,
+                               rolling_agg_oracle, OhlcBarsConfig,
+                               ohlc_bars_oracle, AttributionConfig,
+                               attribution_oracle, ConversionPathConfig,
+                               conversion_paths_oracle, ActiveUsersConfig,
                                active_users_oracle)
-from .operators.diff import (TableDiffConfig, build_table_diff,
-                             table_diff_oracle)
-from .operators.rangejoin import (IntervalJoinConfig, build_interval_join,
-                                  interval_join_oracle)
-from .operators.checks import (Check, VaultChecksConfig,
-                               build_vault_checks, vault_checks_oracle)
-from .operators.rollup import (GroupingSetsConfig, build_grouping_sets,
-                               grouping_sets_oracle)
-from .operators.merge import (Scd1MergeConfig, build_scd1_merge,
-                              scd1_merge_oracle)
-from .operators.jsonx import (JsonExtractConfig, build_json_extract,
-                              json_extract_oracle)
-from .operators.pivot import (PivotConfig, build_pivot, pivot_oracle)
-from .operators.quarantine import (QuarantineConfig, build_quarantine,
-                                   quarantine_oracle)
-from .sources.readers import (SourceRoundtripConfig,
-                              build_source_roundtrip,
+from .operators.diff import TableDiffConfig, table_diff_oracle
+from .operators.rangejoin import IntervalJoinConfig, interval_join_oracle
+from .operators.checks import Check, VaultChecksConfig, vault_checks_oracle
+from .operators.rollup import GroupingSetsConfig, grouping_sets_oracle
+from .operators.merge import Scd1MergeConfig, scd1_merge_oracle
+from .operators.jsonx import JsonExtractConfig, json_extract_oracle
+from .operators.pivot import PivotConfig, pivot_oracle
+from .operators.quarantine import QuarantineConfig, quarantine_oracle
+from .sources.readers import (SourceRoundtripConfig, build_source_roundtrip,
                               source_roundtrip_oracle,
                               PartitionedRoundtripConfig,
-                              build_partitioned_roundtrip,
                               partitioned_roundtrip_oracle)
-from .llm.privacy import (KAnonymityConfig, build_k_anonymity,
-                          k_anonymity_oracle)
-from .llm.urlcuration import (UrlGateConfig, build_url_gate,
-                              url_gate_oracle)
-from .llm.outliers import (TukeyOutlierConfig, build_tukey_outliers,
-                           tukey_outliers_oracle)
-from .llm.negatives import (NegativeSamplesConfig,
-                            build_negative_samples,
-                            negative_samples_oracle)
-from .llm.profile import (ProfileDriftConfig, build_profile_drift,
-                          profile_drift_oracle)
-from .operators.compaction import (CompactionConfig, build_compaction,
-                                   compaction_oracle)
-from .llm.profile import (TrendingConfig, build_trending_topk,
-                          trending_topk_oracle)
-from .llm.lineclean import (TextNormalizeConfig, build_text_normalize,
-                            text_normalize_oracle)
+from .llm.privacy import KAnonymityConfig, k_anonymity_oracle
+from .llm.urlcuration import UrlGateConfig, url_gate_oracle
+from .llm.outliers import TukeyOutlierConfig, tukey_outliers_oracle
+from .llm.negatives import NegativeSamplesConfig, negative_samples_oracle
+from .llm.profile import ProfileDriftConfig, profile_drift_oracle
+from .operators.compaction import CompactionConfig, compaction_oracle
+from .llm.profile import TrendingConfig, trending_topk_oracle
+from .llm.lineclean import TextNormalizeConfig, text_normalize_oracle
 from .plans.sqlbuild import SqlBuilder
+from .yaml_api import KINDS
 
 G = DEFAULT
 
@@ -2614,50 +2537,32 @@ PROFILE_DRIFTS = {"docs_profile_drift": ProfileDriftConfig(
 _NO_DEPS = lambda c: []  # noqa: E731 — LLM ops read raw tables directly
 
 
-# name -> (cfg-dict, spark builder, oracle builder, dependencies)
+# name -> (cfg-dict, catalogue kind, oracle builder): the Spark builder
+# and dependency rule come from yaml_api.KINDS. Entries outside the
+# catalogue (bundles, replay, streams, fixture-only builders) give
+# (cfg-dict, spark builder, oracle builder, dependencies) instead.
 _FAMILIES = [
-    (STAGES, build_stage, stage_oracle,
-     lambda c: []),
-    (HUBS, build_hub, hub_oracle,
-     lambda c: [sm.name for sm in c.source_models]),
-    (LINKS, build_link, link_oracle,
-     lambda c: [sm.name for sm in c.source_models]),
-    (SATS, build_sat_v0, sat_v0_oracle,
-     lambda c: [c.source_model]),
-    (SATS_V1, build_sat_v1, sat_v1_oracle,
-     lambda c: [c.sat_v0]),
-    (NH_SATS, build_nh_sat, nh_sat_oracle,
-     lambda c: [c.source_model]),
-    (NH_LINKS, build_nh_link, nh_link_oracle,
-     lambda c: [sm.name for sm in c.source_models]),
-    (MA_SATS, build_ma_sat_v0, ma_sat_v0_oracle,
-     lambda c: [c.source_model]),
-    (MA_SATS_V1, build_ma_sat_v1, ma_sat_v1_oracle,
-     lambda c: [c.ma_sat_v0]),
-    (REC_TRACKS, build_rec_track_sat, rec_track_oracle,
-     lambda c: [sm.name for sm in c.source_models]),
-    (EFF_SATS, build_eff_sat_v0, eff_sat_v0_oracle,
-     lambda c: [c.source_model]),
-    (REF_HUBS, build_ref_hub, ref_hub_oracle,
-     lambda c: [sm.name for sm in c.source_models]),
-    (REF_SATS, build_ref_sat_v0, ref_sat_v0_oracle,
-     lambda c: [c.source_model]),
-    (REF_SATS_V1, build_ref_sat_v1, ref_sat_v1_oracle,
-     lambda c: [c.ref_sat_v0]),
-    (REF_TABLES, build_ref_table, ref_table_oracle,
-     lambda c: [c.ref_hub] + [s for s, _ in c.ref_satellites]
-               + ([c.snapshot_relation] if c.snapshot_relation else [])),
-    (SNAPS_V0, None, None, lambda c: []),   # special-cased (no registry arg)
-    (SNAPS_V1, build_snap_v1, snap_v1_oracle,
-     lambda c: [c.snap_v0]),
-    (PITS, build_pit, pit_oracle,
-     lambda c: [c.tracked_entity, c.snapshot_relation] + list(c.sat_names)),
+    (STAGES, "stage", stage_oracle),
+    (HUBS, "hub", hub_oracle),
+    (LINKS, "link", link_oracle),
+    (SATS, "sat_v0", sat_v0_oracle),
+    (SATS_V1, "sat_v1", sat_v1_oracle),
+    (NH_SATS, "nh_sat", nh_sat_oracle),
+    (NH_LINKS, "nh_link", nh_link_oracle),
+    (MA_SATS, "ma_sat_v0", ma_sat_v0_oracle),
+    (MA_SATS_V1, "ma_sat_v1", ma_sat_v1_oracle),
+    (REC_TRACKS, "rec_track_sat", rec_track_oracle),
+    (EFF_SATS, "eff_sat_v0", eff_sat_v0_oracle),
+    (REF_HUBS, "ref_hub", ref_hub_oracle),
+    (REF_SATS, "ref_sat_v0", ref_sat_v0_oracle),
+    (REF_SATS_V1, "ref_sat_v1", ref_sat_v1_oracle),
+    (REF_TABLES, "ref_table", ref_table_oracle),
+    (SNAPS_V0, "control_snap_v0", None),  # oracle special-cased (no registry)
+    (SNAPS_V1, "control_snap_v1", snap_v1_oracle),
+    (PITS, "pit", pit_oracle),
     (PIT_CLEANUPS, build_pit_cleanup, pit_cleanup_oracle,
      lambda c: [c.pit_entity, c.snapshot_relation]),
-    (BRIDGES, build_bridge, bridge_oracle,
-     lambda c: [c.base_entity, c.snapshot_relation]
-               + [leg.link_entity for leg in c.legs]
-               + [leg.eff_sat for leg in c.legs if leg.eff_sat]),
+    (BRIDGES, "bridge", bridge_oracle),
     (BUNDLES, build_bundle, bundle_oracle,
      lambda c: [m.entity for m in c.members]),
     (UNION_BUNDLES, build_union_bundle, union_bundle_oracle,
@@ -2667,87 +2572,66 @@ _FAMILIES = [
                                            STAGES, SNAPS_V1),
      replay_oracle,
      lambda c: [m.entity for m in c.members]),
-    (DEDUP_EXACT, build_exact_dedup, exact_dedup_oracle, _NO_DEPS),
-    (DEDUP_MINHASH, build_minhash_lsh, minhash_lsh_oracle, _NO_DEPS),
-    (DEDUP_SIMHASH, build_simhash_dedup, simhash_dedup_oracle, _NO_DEPS),
-    (DEDUP_JACCARD, build_ngram_jaccard, ngram_jaccard_oracle, _NO_DEPS),
-    (DEDUP_COSINE, build_embedding_cosine, embedding_cosine_oracle, _NO_DEPS),
-    (DEDUP_GROUPS, build_dup_groups, dup_groups_oracle,
-     lambda c: [c.pairs_entity]),
-    (CONTAMINATION, build_contamination, contamination_oracle, _NO_DEPS),
+    (DEDUP_EXACT, "exact_dedup", exact_dedup_oracle),
+    (DEDUP_MINHASH, "minhash_lsh", minhash_lsh_oracle),
+    (DEDUP_SIMHASH, "simhash_dedup", simhash_dedup_oracle),
+    (DEDUP_JACCARD, "ngram_jaccard", ngram_jaccard_oracle),
+    (DEDUP_COSINE, "embedding_cosine", embedding_cosine_oracle),
+    (DEDUP_GROUPS, "dup_groups", dup_groups_oracle),
+    (CONTAMINATION, "contamination", contamination_oracle),
     (DECONTAM, _build_decontam, _decontam_oracle, _NO_DEPS),
-    (ANNS, build_ann_topk, ann_topk_oracle, _NO_DEPS),
-    (ANN_IVFS, build_ann_ivf, ann_ivf_oracle, _NO_DEPS),
-    (ANN_INDEXES, build_ann_index_persisted, ann_index_persisted_oracle,
-     _NO_DEPS),
-    (TEXT_LANGID, build_langid, langid_oracle, _NO_DEPS),
-    (TEXT_QUALITY, build_quality, quality_oracle, _NO_DEPS),
-    (TEXT_TOKENS, build_token_count, token_count_oracle, _NO_DEPS),
-    (TEXT_FPRINT, build_fingerprint, fingerprint_oracle, _NO_DEPS),
-    (MULTIMODAL, build_multimodal_features, multimodal_oracle, _NO_DEPS),
-    (MULTIMODAL_DECODE, build_multimodal_decode, multimodal_decode_oracle,
-     _NO_DEPS),
-    (MULTIMODAL_FRAMES, build_multimodal_framesample,
-     multimodal_framesample_oracle, _NO_DEPS),
-    (MULTIMODAL_RESIZES, build_multimodal_resize,
-     multimodal_resize_oracle, _NO_DEPS),
-    (MULTIMODAL_WAVS, build_wav_decode, wav_decode_oracle, _NO_DEPS),
-    (MULTIMODAL_WAV_STATS, build_wav_stats, wav_stats_oracle, _NO_DEPS),
-    (MULTIMODAL_ULAW, build_ulaw_stats, ulaw_stats_oracle, _NO_DEPS),
-    (MULTIMODAL_PNG, build_png_decode, png_decode_oracle, _NO_DEPS),
-    (MULTIMODAL_GIF, build_gif_frames, gif_frames_oracle, _NO_DEPS),
-    (CURATION, build_curation, curation_oracle,
-     lambda c: [c.quality_entity, c.langid_entity]
-               + ([c.canonical_entity] if c.canonical_entity
-                  else [c.dedup_entity])
-               + ([c.repetition_entity] if c.repetition_entity else [])),
-    (REPETITION, build_repetition, repetition_oracle, _NO_DEPS),
-    (PII, build_pii_redact, pii_redact_oracle, _NO_DEPS),
-    (SAMPLING, build_dataset_mix, dataset_mix_oracle, _NO_DEPS),
-    (CORPUS_SHUFFLE, build_corpus_shuffle, corpus_shuffle_oracle,
-     _NO_DEPS),
-    (TEMPERATURE_MIX, build_temperature_mix, temperature_mix_oracle,
-     _NO_DEPS),
+    (ANNS, "ann_topk", ann_topk_oracle),
+    (ANN_IVFS, "ann_ivf", ann_ivf_oracle),
+    (ANN_INDEXES, "ann_index", ann_index_persisted_oracle),
+    (TEXT_LANGID, "langid", langid_oracle),
+    (TEXT_QUALITY, "quality", quality_oracle),
+    (TEXT_TOKENS, "token_count", token_count_oracle),
+    (TEXT_FPRINT, "fingerprint", fingerprint_oracle),
+    (MULTIMODAL, "multimodal", multimodal_oracle),
+    (MULTIMODAL_DECODE, "multimodal_decode", multimodal_decode_oracle),
+    (MULTIMODAL_FRAMES, "frame_sample", multimodal_framesample_oracle),
+    (MULTIMODAL_RESIZES, "image_resize", multimodal_resize_oracle),
+    (MULTIMODAL_WAVS, "wav_decode", wav_decode_oracle),
+    (MULTIMODAL_WAV_STATS, "wav_stats", wav_stats_oracle),
+    (MULTIMODAL_ULAW, "ulaw_stats", ulaw_stats_oracle),
+    (MULTIMODAL_PNG, "png_decode", png_decode_oracle),
+    (MULTIMODAL_GIF, "gif_frames", gif_frames_oracle),
+    (CURATION, "curation", curation_oracle),
+    (REPETITION, "repetition", repetition_oracle),
+    (PII, "pii_redact", pii_redact_oracle),
+    (SAMPLING, "dataset_mix", dataset_mix_oracle),
+    (CORPUS_SHUFFLE, "corpus_shuffle", corpus_shuffle_oracle),
+    (TEMPERATURE_MIX, "temperature_mix", temperature_mix_oracle),
     (TEMPERATURE_RESAMPLE, build_temperature_resample,
      temperature_resample_oracle, _NO_DEPS),
-    (PACKING, build_sequence_packing, sequence_packing_oracle, _NO_DEPS),
-    (SEMDEDUP, build_semdedup, semdedup_oracle, _NO_DEPS),
-    (QUANTIZE, build_scalar_quantize, scalar_quantize_oracle, _NO_DEPS),
-    (SUBSTRING, build_substring_dup, substring_dup_oracle, _NO_DEPS),
-    (TFIDF, build_tfidf, tfidf_oracle, _NO_DEPS),
-    (PACK_MANIFEST, build_packing_manifest, packing_manifest_oracle,
-     _NO_DEPS),
-    (DEDUP_REPORT, build_dedup_report, dedup_report_oracle,
-     lambda c: [c.langid_entity, c.quality_entity, c.groups_entity]),
-    (SOURCE_STATS, build_source_stats, source_stats_oracle, _NO_DEPS),
-    (SOURCE_GATE, build_source_gate, source_gate_oracle,
-     lambda c: [c.stats_entity]),
-    (DOC_CHUNKS, build_doc_chunks, doc_chunks_oracle, _NO_DEPS),
-    (CHUNK_DEDUP, build_chunk_dedup, chunk_dedup_oracle,
-     lambda c: [c.chunks_entity]),
-    (CHUNK_SCRUB, build_chunk_scrub, chunk_scrub_oracle, _NO_DEPS),
-    (LM_SCORE, build_lm_score, lm_score_oracle, _NO_DEPS),
-    (CCNET, build_ccnet_buckets, ccnet_buckets_oracle,
-     lambda c: [c.score_entity]),
-    (VOCAB, build_vocab_topk, vocab_topk_oracle, _NO_DEPS),
-    (GOPHER, build_gopher_rules, gopher_rules_oracle, _NO_DEPS),
-    (BOILERPLATE, build_boilerplate_removal, boilerplate_removal_oracle,
-     _NO_DEPS),
-    (DSIR, build_dsir_score, dsir_score_oracle, _NO_DEPS),
+    (PACKING, "sequence_packing", sequence_packing_oracle),
+    (SEMDEDUP, "semdedup", semdedup_oracle),
+    (QUANTIZE, "scalar_quantize", scalar_quantize_oracle),
+    (SUBSTRING, "substring_dup", substring_dup_oracle),
+    (TFIDF, "tfidf", tfidf_oracle),
+    (PACK_MANIFEST, "packing_manifest", packing_manifest_oracle),
+    (DEDUP_REPORT, "dedup_report", dedup_report_oracle),
+    (SOURCE_STATS, "source_stats", source_stats_oracle),
+    (SOURCE_GATE, "source_gate", source_gate_oracle),
+    (DOC_CHUNKS, "doc_chunks", doc_chunks_oracle),
+    (CHUNK_DEDUP, "chunk_dedup", chunk_dedup_oracle),
+    (CHUNK_SCRUB, "chunk_scrub", chunk_scrub_oracle),
+    (LM_SCORE, "lm_score", lm_score_oracle),
+    (CCNET, "ccnet_buckets", ccnet_buckets_oracle),
+    (VOCAB, "vocab_topk", vocab_topk_oracle),
+    (GOPHER, "gopher_rules", gopher_rules_oracle),
+    (BOILERPLATE, "boilerplate_removal", boilerplate_removal_oracle),
+    (DSIR, "dsir_score", dsir_score_oracle),
     (QUALITY_CLF, build_quality_classifier, quality_classifier_oracle,
      _NO_DEPS),
-    (PROFILE, build_dataset_profile, dataset_profile_oracle, _NO_DEPS),
-    (QUANTILES, build_grouped_quantiles, grouped_quantiles_oracle,
-     _NO_DEPS),
-    (TOKEN_BUDGET, build_token_budget, token_budget_oracle, _NO_DEPS),
-    (LINECLEAN, build_line_clean, line_clean_oracle, _NO_DEPS),
-    (CANONICAL, build_canonical_selection, canonical_selection_oracle,
-     lambda c: [c.groups_entity, c.quality_entity]),
-    (SPLIT, build_stratified_split, stratified_split_oracle, _NO_DEPS),
-    (SOURCE_CAP, build_source_cap, source_cap_oracle,
-     lambda c: [c.quality_entity]),
-    (INC_DEDUP, build_incremental_dedup, incremental_dedup_oracle,
-     _NO_DEPS),
+    (PROFILE, "dataset_profile", dataset_profile_oracle),
+    (QUANTILES, "grouped_quantiles", grouped_quantiles_oracle),
+    (TOKEN_BUDGET, "token_budget", token_budget_oracle),
+    (LINECLEAN, "line_clean", line_clean_oracle),
+    (CANONICAL, "canonical_selection", canonical_selection_oracle),
+    (SPLIT, "stratified_split", stratified_split_oracle),
+    (SOURCE_CAP, "source_cap", source_cap_oracle),
+    (INC_DEDUP, "incremental_dedup", incremental_dedup_oracle),
     (INC_DEDUP_STREAM, build_streaming_incremental_dedup,
      streaming_incremental_dedup_oracle, _NO_DEPS),
     (SESSION_STREAMS, build_streaming_sessions,
@@ -2766,78 +2650,70 @@ _FAMILIES = [
     (OHLC_STREAMS, build_streaming_ohlc, streaming_ohlc_oracle,
      _NO_DEPS),
     (SCD1_STREAMS, build_streaming_scd1, scd1_merge_oracle, _NO_DEPS),
-    (ASOF, build_asof_join, asof_join_oracle, _NO_DEPS),
-    (SESSIONS, build_sessionize, sessionize_oracle, _NO_DEPS),
-    (HOPPING, build_hopping_agg, hopping_agg_oracle, _NO_DEPS),
-    (FUNNELS, build_funnel, funnel_oracle, _NO_DEPS),
-    (COHORTS, build_cohort_retention, cohort_retention_oracle, _NO_DEPS),
-    (DIFFS, build_table_diff, table_diff_oracle,
-     lambda c: [c.left_entity, c.right_entity]),
-    (INTERVAL_JOINS, build_interval_join, interval_join_oracle,
-     lambda c: [c.points_entity, c.intervals_entity]),
-    (ROLLUPS, build_grouping_sets, grouping_sets_oracle, _NO_DEPS),
-    (SCD1_MERGES, build_scd1_merge, scd1_merge_oracle, _NO_DEPS),
-    (HISTOGRAMS, build_histogram, histogram_oracle, _NO_DEPS),
-    (JSON_EXTRACTS, build_json_extract, json_extract_oracle, _NO_DEPS),
-    (PIVOTS, build_pivot, pivot_oracle, _NO_DEPS),
-    (QUARANTINES, build_quarantine, quarantine_oracle, _NO_DEPS),
+    (ASOF, "asof_join", asof_join_oracle),
+    (SESSIONS, "sessionize", sessionize_oracle),
+    (HOPPING, "hopping_agg", hopping_agg_oracle),
+    (FUNNELS, "funnel", funnel_oracle),
+    (COHORTS, "cohort_retention", cohort_retention_oracle),
+    (DIFFS, "table_diff", table_diff_oracle),
+    (INTERVAL_JOINS, "interval_join", interval_join_oracle),
+    (ROLLUPS, "grouping_sets", grouping_sets_oracle),
+    (SCD1_MERGES, "scd1_merge", scd1_merge_oracle),
+    (HISTOGRAMS, "histogram", histogram_oracle),
+    (JSON_EXTRACTS, "json_extract", json_extract_oracle),
+    (PIVOTS, "pivot", pivot_oracle),
+    (QUARANTINES, "quarantine", quarantine_oracle),
     (SOURCE_ROUNDTRIPS, build_source_roundtrip, source_roundtrip_oracle,
      _NO_DEPS),
-    (QUANTILE_GATES, build_quantile_gate, quantile_gate_oracle,
-     _NO_DEPS),
-    (SUFFICIENT_STATS, build_sufficient_stats, sufficient_stats_oracle,
-     _NO_DEPS),
-    (EXACT_SAMPLES, build_exact_sample, exact_sample_oracle, _NO_DEPS),
-    (ROLLING, build_rolling_agg, rolling_agg_oracle, _NO_DEPS),
-    (LOCFS, build_locf, locf_oracle, _NO_DEPS),
-    (GROUPED_VOCABS, build_grouped_vocab, grouped_vocab_oracle, _NO_DEPS),
-    (HEAVY_HITTERS, build_heavy_hitters, heavy_hitters_oracle, _NO_DEPS),
-    (TRANSITIONS, build_transition_matrix, transition_matrix_oracle,
-     _NO_DEPS),
-    (LINKAGES, build_blocked_linkage, blocked_linkage_oracle, _NO_DEPS),
-    (SOURCE_OVERLAPS, build_source_overlap, source_overlap_oracle,
-     _NO_DEPS),
-    (COOCCURRENCES, build_cooccurrence, cooccurrence_oracle, _NO_DEPS),
-    (OHLC_BARS, build_ohlc_bars, ohlc_bars_oracle, _NO_DEPS),
-    (ATTRIBUTIONS, build_attribution, attribution_oracle, _NO_DEPS),
-    (K_ANONYMITIES, build_k_anonymity, k_anonymity_oracle, _NO_DEPS),
-    (URL_GATES, build_url_gate, url_gate_oracle, _NO_DEPS),
-    (OUTLIER_GATES, build_tukey_outliers, tukey_outliers_oracle,
-     _NO_DEPS),
-    (NEGATIVE_SAMPLES, build_negative_samples, negative_samples_oracle,
-     _NO_DEPS),
-    (PROFILE_DRIFTS, build_profile_drift, profile_drift_oracle,
-     _NO_DEPS),
-    (KFOLDS, build_kfold, kfold_oracle, _NO_DEPS),
-    (PARTITIONED_ROUNDTRIPS, build_partitioned_roundtrip,
-     partitioned_roundtrip_oracle, _NO_DEPS),
-    (COMPACTIONS, build_compaction, compaction_oracle, _NO_DEPS),
-    (PERCENTILE_RANKS, build_percentile_rank, percentile_rank_oracle,
-     _NO_DEPS),
-    (TRENDINGS, build_trending_topk, trending_topk_oracle, _NO_DEPS),
-    (NORMALIZES, build_text_normalize, text_normalize_oracle, _NO_DEPS),
-    (CONVERSION_PATHS, build_conversion_paths, conversion_paths_oracle,
-     _NO_DEPS),
-    (ACTIVE_USERS, build_active_users, active_users_oracle, _NO_DEPS),
-    (PROPORTIONAL_SAMPLES, build_proportional_sample,
-     proportional_sample_oracle, _NO_DEPS),
-    # deps deliberately SET-dedup (r13, measured): listing per-check
-    # multiplicity would make _multi_consumed persist entities named by
-    # several checks (hub_supplier x3 branches), but each check branch
-    # prunes to 1-2 columns while the cache materializes ALL columns —
-    # measured 2.59 -> 2.97 s min-of-4 at sf0.1 with the persists on.
-    # Branch rebuilds ride the persisted stage caches, so the duplicate
-    # work is only the pruned dedup window, cheaper than caching.
-    (VAULT_CHECKS, build_vault_checks, vault_checks_oracle,
-     lambda c: sorted({ch.entity for ch in c.checks}
-                      | {ch.to_entity for ch in c.checks
-                         if ch.to_entity})),
+    (QUANTILE_GATES, "quantile_gate", quantile_gate_oracle),
+    (SUFFICIENT_STATS, "sufficient_stats", sufficient_stats_oracle),
+    (EXACT_SAMPLES, "exact_sample", exact_sample_oracle),
+    (ROLLING, "rolling_agg", rolling_agg_oracle),
+    (LOCFS, "locf", locf_oracle),
+    (GROUPED_VOCABS, "grouped_vocab", grouped_vocab_oracle),
+    (HEAVY_HITTERS, "heavy_hitters", heavy_hitters_oracle),
+    (TRANSITIONS, "transition_matrix", transition_matrix_oracle),
+    (LINKAGES, "blocked_linkage", blocked_linkage_oracle),
+    (SOURCE_OVERLAPS, "source_overlap", source_overlap_oracle),
+    (COOCCURRENCES, "cooccurrence", cooccurrence_oracle),
+    (OHLC_BARS, "ohlc_bars", ohlc_bars_oracle),
+    (ATTRIBUTIONS, "attribution", attribution_oracle),
+    (K_ANONYMITIES, "k_anonymity", k_anonymity_oracle),
+    (URL_GATES, "url_gate", url_gate_oracle),
+    (OUTLIER_GATES, "tukey_outliers", tukey_outliers_oracle),
+    (NEGATIVE_SAMPLES, "negative_samples", negative_samples_oracle),
+    (PROFILE_DRIFTS, "profile_drift", profile_drift_oracle),
+    (KFOLDS, "kfold", kfold_oracle),
+    (PARTITIONED_ROUNDTRIPS, "partitioned_roundtrip",
+     partitioned_roundtrip_oracle),
+    (COMPACTIONS, "compaction", compaction_oracle),
+    (PERCENTILE_RANKS, "percentile_rank", percentile_rank_oracle),
+    (TRENDINGS, "trending_topk", trending_topk_oracle),
+    (NORMALIZES, "text_normalize", text_normalize_oracle),
+    (CONVERSION_PATHS, "conversion_paths", conversion_paths_oracle),
+    (ACTIVE_USERS, "active_users", active_users_oracle),
+    (PROPORTIONAL_SAMPLES, "proportional_sample",
+     proportional_sample_oracle),
+    (VAULT_CHECKS, "vault_checks", vault_checks_oracle),
 ]
+
+
+def _declared(deps_of):
+    """A catalogue dependency rule narrowed to declared entities: raw
+    tables (``customer``, ``documents``) are registry sources, so the
+    oracle walker, ``_multi_consumed`` and replay's persist walk never
+    see them as entities."""
+    return lambda c: [d for d in deps_of(c) if d in _index()]
 
 
 def _entity_index():
     idx = {}
-    for configs, bld, orc, deps in _FAMILIES:
+    for configs, bld, orc, *deps in _FAMILIES:
+        if isinstance(bld, str):
+            kind = KINDS[bld]
+            bld, deps = kind.build, _declared(kind.deps)
+        else:
+            (deps,) = deps
         for name, cfg in configs.items():
             idx[name] = (cfg, bld, orc, deps)
     return idx
@@ -2854,11 +2730,9 @@ def _index():
 
 
 def ensure_session_conf(spark):
-    """Set runtime-settable confs the fixtures rely on (the driver may
-    hand us a session built without them)."""
-    for k, v in (("spark.sql.session.timeZone", "UTC"),
-                 ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-                 ("spark.sql.adaptive.enabled", "true")):
+    """Set the engine's SESSION_CONFS at runtime (the driver may hand us
+    a session built without them)."""
+    for k, v in SESSION_CONFS:
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -2872,12 +2746,8 @@ def registry(spark, sf_dir: str) -> Registry:
     ensure_session_conf(spark)
     reg = testdata_registry(sf_dir)
     for name, (cfg, bld, _orc, _deps) in _index().items():
-        if name in SNAPS_V0:
-            reg.spark_loaders[name] = (
-                lambda spark, c=cfg: build_snap_v0(spark, c, G))
-        else:
-            reg.spark_loaders[name] = (
-                lambda spark, c=cfg, f=bld: f(spark, reg, c, G))
+        reg.spark_loaders[name] = (
+            lambda spark, c=cfg, f=bld: f(spark, reg, c, G))
     return reg
 
 
@@ -2885,11 +2755,7 @@ def oracle_registry() -> Registry:
     """Oracle-side registry: raw tables are driver-registered DuckDB views;
     entities resolve to their CTE names."""
     reg = Registry()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents", "embeddings"):
-        reg.duckdb_relations[t] = t
-    reg.duckdb_relations["events"] = (
-        "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)")
+    reg.duckdb_relations.update(TESTDATA_DUCKDB)
     for name in _index():
         reg.duckdb_relations[name] = name
     return reg

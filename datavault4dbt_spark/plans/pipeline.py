@@ -296,10 +296,7 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             f"selection needs {missing}, excluded from this run and "
             f"never materialized — widen the selection (e.g. "
             f"'+<node>') or load them first")
-    # stores without the key protocol (BucketedVault) never skip
-    keyed = hasattr(store, "record_key")
-    key_of = (input_keys(decls, store, reg, g) if keyed
-              else lambda name: None)
+    key_of = input_keys(decls, store, reg, g)
     read_outside_deps: set = set()
 
     def build(d, **kw):
@@ -345,8 +342,7 @@ def run_pipeline(spark, decls: dict, store: ParquetStore,
             counts[name] = 0        # nothing it reads changed: no jobs
         else:
             counts[name] = _load(store, name, d, build, exists, count_rows)
-            if keyed:
-                store.record_key(name, key if keyable(name) else None)
+            store.record_key(name, key if keyable(name) else None)
         # downstream entities read the STORED table, not the plan
         # (_invalidate also unpersists any cached copy of the old plan);
         # going through store.read keeps the pipeline storage-agnostic

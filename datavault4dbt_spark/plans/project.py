@@ -9,7 +9,7 @@ This module is the equivalent front door: a directory of YAML files
 
 File format (``<name>.yml``)::
 
-    kind: hub                  # any yaml_api.PARSERS kind
+    kind: hub                  # any kind in the yaml_api.KINDS catalogue
     name: hub_customer         # optional; defaults to the file stem
     materialize: incremental   # optional; kind-appropriate default
     depends_on: [stage_x]      # optional; unioned with inferred deps
@@ -33,286 +33,16 @@ import os
 import yaml as _yaml
 
 from ..context import GlobalConfig, DEFAULT, Registry
-from .. import yaml_api
-from ..operators.stage import build_stage
-from ..operators.hub import build_hub
-from ..operators.link import build_link
-from ..operators.sat import build_sat_v0, build_sat_v1
-from ..operators.nh import build_nh_sat, build_nh_link
-from ..operators.ma_sat import build_ma_sat_v0, build_ma_sat_v1
-from ..operators.rec_track import build_rec_track_sat
-from ..operators.eff_sat import build_eff_sat_v0
-from ..operators.ref_entities import (build_ref_hub, build_ref_sat_v0,
-                                      build_ref_sat_v1, build_ref_table)
-from ..operators.snapshots import build_snap_v0, build_snap_v1
-from ..operators.pit import build_pit
-from ..operators.bridge import build_bridge
-from ..operators.checks import build_vault_checks
+from ..yaml_api import KINDS
 from .incremental import ParquetStore
 from .pipeline import EntityDecl, run_pipeline
 
-
-def _snap_v0_build(spark, reg, cfg, g, **_kw):
-    # build_snap_v0 takes no registry (pure generated spine)
-    return build_snap_v0(spark, cfg, g)
-
-
-# kind -> (builder, default materialization, dep-inference)
-# Materialization defaults mirror the reference's dbt_project.yml:
-# stages and virtual end-dating (v1) entities are views, the snapshot
-# spine is a (small) table, everything else loads incrementally.
-KINDS = {
-    "stage": (build_stage, "view",
-              lambda c: [c.source_model] + [p.ref_model
-                                            for p in c.prejoined_columns]),
-    "hub": (build_hub, "incremental",
-            lambda c: [s.name for s in c.source_models]),
-    "link": (build_link, "incremental",
-             lambda c: [s.name for s in c.source_models]),
-    "sat_v0": (build_sat_v0, "incremental", lambda c: [c.source_model]),
-    "sat_v1": (build_sat_v1, "view", lambda c: [c.sat_v0]),
-    "nh_sat": (build_nh_sat, "incremental", lambda c: [c.source_model]),
-    "nh_link": (build_nh_link, "incremental",
-                lambda c: [s.name for s in c.source_models]),
-    "ma_sat_v0": (build_ma_sat_v0, "incremental", lambda c: [c.source_model]),
-    "ma_sat_v1": (build_ma_sat_v1, "view", lambda c: [c.ma_sat_v0]),
-    "rec_track_sat": (build_rec_track_sat, "incremental",
-                      lambda c: [s.name for s in c.source_models]),
-    "eff_sat_v0": (build_eff_sat_v0, "incremental",
-                   lambda c: [c.source_model]),
-    "ref_hub": (build_ref_hub, "incremental",
-                lambda c: [s.name for s in c.source_models]),
-    "ref_sat_v0": (build_ref_sat_v0, "incremental",
-                   lambda c: [c.source_model]),
-    "ref_sat_v1": (build_ref_sat_v1, "view", lambda c: [c.ref_sat_v0]),
-    "ref_table": (build_ref_table, "view",
-                  lambda c: [c.ref_hub] + [s for s, _ in c.ref_satellites]
-                  + ([c.snapshot_relation] if c.snapshot_relation else [])),
-    "control_snap_v0": (_snap_v0_build, "table", lambda c: []),
-    "control_snap_v1": (build_snap_v1, "view", lambda c: [c.snap_v0]),
-    "pit": (build_pit, "incremental",
-            lambda c: [c.tracked_entity, c.snapshot_relation]
-            + list(c.sat_names)),
-    "bridge": (build_bridge, "incremental",
-               lambda c: [c.base_entity, c.snapshot_relation]
-               + [leg.link_entity for leg in c.legs]
-               + [leg.eff_sat for leg in c.legs if leg.eff_sat]),
-    # the dbt-test analogue runs AFTER its checked entities; a rerun
-    # rebuilds the report (table, never incremental)
-    "vault_checks": (build_vault_checks, "table",
-                     lambda c: sorted({ch.entity for ch in c.checks}
-                                      | {ch.to_entity for ch in c.checks
-                                         if ch.to_entity})),
-}
-
-
-def _llm_kinds() -> dict:
-    """Training-data operators as project entities: derived analytics
-    results, so they materialize as full-rebuild tables (rerunning a
-    project recomputes them from current inputs — dedup/quality output
-    is not incremental by nature)."""
-    from ..llm.dedup import (build_exact_dedup, build_minhash_lsh,
-                             build_simhash_dedup, build_ngram_jaccard,
-                             build_embedding_cosine, build_dup_groups)
-    from ..llm.similarity import build_ann_topk, build_ann_ivf
-    from ..llm.textstats import (build_langid, build_quality,
-                                 build_token_count, build_fingerprint)
-    from ..llm.multimodal import (build_multimodal_features,
-                                  build_multimodal_decode)
-    from ..llm.curation import build_curation, build_dedup_report
-    from ..llm.contamination import (build_contamination,
-                                     build_decontaminated)
-    from ..llm.scrub import build_repetition, build_pii_redact
-    from ..llm.sampling import (build_dataset_mix, build_sequence_packing,
-                                build_packing_manifest,
-                                build_corpus_shuffle,
-                                build_temperature_mix)
-    from ..llm.semdedup import build_semdedup
-    from ..llm.quantize import build_scalar_quantize
-    from ..llm.substring import build_substring_dup
-    from ..llm.tfidf import build_tfidf
-    from ..llm.sources import (build_source_stats, build_source_gate,
-                               build_token_budget)
-    from ..llm.chunking import (build_doc_chunks, build_chunk_dedup,
-                                build_chunk_scrub)
-    from ..llm.lm import build_lm_score, build_ccnet_buckets
-    from ..llm.vocab import build_vocab_topk
-    from ..llm.gopher import build_gopher_rules
-    from ..llm.boilerplate import build_boilerplate_removal
-    from ..llm.dsir import build_dsir_score
-    from ..llm.profile import (build_dataset_profile,
-                               build_grouped_quantiles)
-    from ..llm.lineclean import build_line_clean
-    from ..llm.selection import (build_canonical_selection,
-                                 build_stratified_split, build_source_cap)
-    from ..llm.incdedup import build_incremental_dedup
-    from ..operators.asof import build_asof_join
-    from ..operators.events import (build_sessionize, build_hopping_agg,
-                                    build_funnel, build_cohort_retention)
-    from ..operators.rangejoin import build_interval_join
-    from ..operators.diff import build_table_diff
-    from ..operators.rollup import build_grouping_sets
-    from ..operators.merge import build_scd1_merge
-    from ..operators.jsonx import build_json_extract
-    from ..operators.pivot import build_pivot
-    from ..operators.quarantine import build_quarantine
-    from ..llm.profile import (build_heavy_hitters, build_histogram,
-                               build_sufficient_stats)
-    from ..llm.vocab import build_grouped_vocab
-    from ..llm.sampling import (build_exact_sample,
-                                build_proportional_sample)
-    from ..llm.selection import build_quantile_gate
-    from ..operators.events import (build_transition_matrix, build_locf,
-                                    build_rolling_agg, build_ohlc_bars,
-                                    build_attribution,
-                                    build_conversion_paths,
-                                    build_active_users)
-    from ..operators.linkage import build_blocked_linkage
-    from ..operators.basket import build_cooccurrence
-    from ..operators.compaction import build_compaction
-    from ..llm.overlap import build_source_overlap
-    from ..llm.privacy import build_k_anonymity
-    from ..llm.selection import build_percentile_rank, build_kfold
-    from ..llm.profile import build_trending_topk
-    from ..llm.lineclean import build_text_normalize
-    from ..sources.readers import build_partitioned_roundtrip
-    from ..llm.annindex import build_ann_index_persisted
-    from ..llm.urlcuration import build_url_gate
-    from ..llm.outliers import build_tukey_outliers
-    from ..llm.negatives import build_negative_samples
-    from ..llm.profile import build_profile_drift
-    from ..llm.multimodal import (build_multimodal_framesample,
-                                  build_multimodal_resize)
-
-    src = lambda c: [c.source]                       # noqa: E731
-    kinds = {
-        "exact_dedup": (build_exact_dedup, src),
-        "minhash_lsh": (build_minhash_lsh, src),
-        "simhash_dedup": (build_simhash_dedup, src),
-        "ngram_jaccard": (build_ngram_jaccard, src),
-        "embedding_cosine": (build_embedding_cosine, src),
-        "dup_groups": (build_dup_groups, lambda c: [c.pairs_entity]),
-        "ann_topk": (build_ann_topk, src),
-        "ann_ivf": (build_ann_ivf, src),
-        "langid": (build_langid, src),
-        "quality": (build_quality, src),
-        "token_count": (build_token_count, src),
-        "fingerprint": (build_fingerprint, src),
-        "multimodal": (build_multimodal_features, src),
-        "curation": (build_curation,
-                     lambda c: [c.quality_entity, c.langid_entity]
-                     + ([c.canonical_entity] if c.canonical_entity
-                        else [c.dedup_entity])
-                     + ([c.repetition_entity]
-                        if c.repetition_entity else [])),
-        "contamination": (build_contamination, src),
-        "repetition": (build_repetition, src),
-        "pii_redact": (build_pii_redact, src),
-        "dataset_mix": (build_dataset_mix, src),
-        "sequence_packing": (build_sequence_packing, src),
-        "semdedup": (build_semdedup, src),
-        "scalar_quantize": (build_scalar_quantize, src),
-        "substring_dup": (build_substring_dup, src),
-        "tfidf": (build_tfidf, src),
-        "packing_manifest": (build_packing_manifest, src),
-        "corpus_shuffle": (build_corpus_shuffle, src),
-        "temperature_mix": (build_temperature_mix, src),
-        "dedup_report": (build_dedup_report,
-                         lambda c: [c.langid_entity, c.quality_entity,
-                                    c.groups_entity]),
-        "source_stats": (build_source_stats, src),
-        "token_budget": (build_token_budget, src),
-        "source_gate": (build_source_gate,
-                        lambda c: [c.stats_entity]),
-        "doc_chunks": (build_doc_chunks, src),
-        "chunk_dedup": (build_chunk_dedup, lambda c: [c.chunks_entity]),
-        "chunk_scrub": (build_chunk_scrub, src),
-        "lm_score": (build_lm_score, src),
-        "ccnet_buckets": (build_ccnet_buckets,
-                          lambda c: [c.source, c.score_entity]),
-        "vocab_topk": (build_vocab_topk, src),
-        "gopher_rules": (build_gopher_rules, src),
-        "boilerplate_removal": (build_boilerplate_removal, src),
-        "dsir_score": (build_dsir_score, src),
-        "multimodal_decode": (build_multimodal_decode, src),
-        "decontaminate": (build_decontaminated, src),
-        "dataset_profile": (build_dataset_profile, src),
-        "grouped_quantiles": (build_grouped_quantiles, src),
-        "line_clean": (build_line_clean, src),
-        "canonical_selection": (build_canonical_selection,
-                                lambda c: [c.groups_entity,
-                                           c.quality_entity]),
-        "stratified_split": (build_stratified_split, src),
-        "source_cap": (build_source_cap,
-                       lambda c: [c.source, c.quality_entity]),
-        # runs its own store loop internally; as a project entity the
-        # RESULT is still a full-rebuild table (the internal index is
-        # scratch state, not the materialization)
-        "incremental_dedup": (build_incremental_dedup, src),
-        "asof_join": (build_asof_join,
-                      lambda c: [c.left_entity, c.right_entity]),
-        "sessionize": (build_sessionize, src),
-        "funnel": (build_funnel, src),
-        "cohort_retention": (build_cohort_retention, src),
-        "table_diff": (build_table_diff,
-                       lambda c: [c.left_entity, c.right_entity]),
-        "hopping_agg": (build_hopping_agg, src),
-        "interval_join": (build_interval_join,
-                          lambda c: [c.points_entity, c.intervals_entity]),
-        "grouping_sets": (build_grouping_sets, src),
-        # runs its own store loop internally; the RESULT is a full
-        # rebuild (the incremental_dedup note above applies)
-        "scd1_merge": (build_scd1_merge, src),
-        "json_extract": (build_json_extract, src),
-        "pivot": (build_pivot, src),
-        "quarantine": (build_quarantine, src),
-        "heavy_hitters": (build_heavy_hitters, src),
-        "histogram": (build_histogram, src),
-        "sufficient_stats": (build_sufficient_stats, src),
-        "grouped_vocab": (build_grouped_vocab, src),
-        "exact_sample": (build_exact_sample, src),
-        "quantile_gate": (build_quantile_gate, src),
-        "transition_matrix": (build_transition_matrix, src),
-        "locf": (build_locf, src),
-        "rolling_agg": (build_rolling_agg, src),
-        "ohlc_bars": (build_ohlc_bars, src),
-        "attribution": (build_attribution, src),
-        "blocked_linkage": (build_blocked_linkage, src),
-        "cooccurrence": (build_cooccurrence, src),
-        "source_overlap": (build_source_overlap, src),
-        "k_anonymity": (build_k_anonymity, src),
-        "percentile_rank": (build_percentile_rank, src),
-        "trending_topk": (build_trending_topk, src),
-        "text_normalize": (build_text_normalize, src),
-        "conversion_paths": (build_conversion_paths, src),
-        "active_users": (build_active_users, src),
-        "proportional_sample": (build_proportional_sample, src),
-        # both stage scratch copies internally; the RESULT is a full
-        # rebuild (the incremental_dedup note above applies)
-        "compaction": (build_compaction, src),
-        "partitioned_roundtrip": (build_partitioned_roundtrip, src),
-        "url_gate": (build_url_gate, src),
-        "tukey_outliers": (build_tukey_outliers, src),
-        "negative_samples": (build_negative_samples, src),
-        "profile_drift": (build_profile_drift, src),
-        "frame_sample": (build_multimodal_framesample, src),
-        "image_resize": (build_multimodal_resize, src),
-        "kfold": (build_kfold, src),
-        # stages its index store internally; the RESULT is a full
-        # rebuild (the incremental_dedup note above applies)
-        "ann_index": (build_ann_index_persisted, src),
-    }
-    # 'table' = full rebuild: run_pipeline never passes target= for it,
-    # matching the builders' signatures. 'incremental' is rejected at
-    # project-load time (see load_project) — derived analytics rebuilt
-    # incrementally would silently append duplicate rows on rerun.
-    return {k: (b, "table", deps) for k, (b, deps) in kinds.items()}
-
-
-_LLM = _llm_kinds()
-KINDS.update(_LLM)
-LLM_KINDS = frozenset(_LLM)
-del _LLM
+# 'table' = full rebuild: run_pipeline never passes target= for it,
+# matching the builders' signatures. The flat-config analytics kinds
+# reject 'incremental' at project-load time (see load_project) — derived
+# analytics rebuilt incrementally would silently append duplicate rows
+# on rerun.
+LLM_KINDS = frozenset(kind for kind, k in KINDS.items() if k.config)
 
 
 def load_project(project_dir: str) -> dict:
@@ -340,12 +70,12 @@ def load_project(project_dir: str) -> dict:
                 f"incremental append would duplicate rows on rerun) — "
                 f"drop the materialize key or use 'table'/'view'")
         declared_deps = tuple(doc.pop("depends_on", ()) or ())
-        cfg = yaml_api.parse(kind, doc, name)
-        build, default_mat, deps_of = KINDS[kind]
-        deps = tuple(dict.fromkeys(list(declared_deps) + list(deps_of(cfg))))
-        decls[name] = EntityDecl(name=name, build=build, cfg=cfg,
+        k = KINDS[kind]
+        cfg = k.parse(doc, name)
+        deps = tuple(dict.fromkeys(list(declared_deps) + list(k.deps(cfg))))
+        decls[name] = EntityDecl(name=name, build=k.build, cfg=cfg,
                                  deps=deps,
-                                 materialize=materialize or default_mat)
+                                 materialize=materialize or k.materialize)
     # declared dependencies must resolve to a project entity or be
     # assumed present in the base registry (raw sources) — only check
     # for obvious self-cycles here; topo_sort raises on real cycles

@@ -24,26 +24,50 @@ over unchanged:
 Source-column schemas are introspected from the registry DataFrame at
 plan-build time (as dbt does via get_columns_in_relation), so the YAML
 needs nothing the reference's YAML does not have.
+
+``KINDS`` at the bottom is the kind catalogue: one row per kind with its
+parser (or flat config class), builder, default materialization and
+dependency rule. ``parse``, ``plans/project.py`` and the fixtures'
+entity index all read it; no other table lists kinds.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, fields
 
 import yaml
 
 from .functions.hashing import HashSpec
 from .operators.stage import (StageConfig, DerivedColumn, Prejoin,
-                              MultiActiveConfig)
-from .operators.hub import HubConfig, EntitySource
-from .operators.link import LinkConfig
-from .operators.sat import SatConfig, SatV1Config
-from .operators.nh import NhSatConfig, NhLinkConfig
-from .operators.ma_sat import MaSatConfig, MaSatV1Config
-from .operators.rec_track import RecTrackConfig
-from .operators.eff_sat import EffSatConfig
-from .operators.pit import PitConfig
+                              MultiActiveConfig, build_stage)
+from .operators.hub import HubConfig, EntitySource, build_hub
+from .operators.link import LinkConfig, build_link
+from .operators.sat import (SatConfig, SatV1Config, build_sat_v0,
+                            build_sat_v1)
+from .operators.nh import (NhSatConfig, NhLinkConfig, build_nh_sat,
+                           build_nh_link)
+from .operators.ma_sat import (MaSatConfig, MaSatV1Config, build_ma_sat_v0,
+                               build_ma_sat_v1)
+from .operators.rec_track import RecTrackConfig, build_rec_track_sat
+from .operators.eff_sat import EffSatConfig, build_eff_sat_v0
+from .operators.pit import PitConfig, build_pit
+from .operators.bridge import BridgeConfig, BridgeLeg, build_bridge
+from .operators.checks import Check, VaultChecksConfig, build_vault_checks
 from .operators.ref_entities import (RefHubConfig, RefSatConfig,
-                                     RefSatV1Config, RefTableConfig)
-from .operators.snapshots import SnapV0Config, SnapV1Config, LogLogic
+                                     RefSatV1Config, RefTableConfig,
+                                     build_ref_hub, build_ref_sat_v0,
+                                     build_ref_sat_v1, build_ref_table)
+from .operators.snapshots import (SnapV0Config, SnapV1Config, LogLogic,
+                                  build_snap_v0, build_snap_v1)
+from .operators import (asof, basket, compaction, diff, events, jsonx,
+                        linkage, merge, pivot, quarantine, rangejoin, rollup)
+from .llm import (annindex, boilerplate, chunking, contamination, curation,
+                  dedup, dsir, gopher, incdedup, lineclean, lm, multimodal,
+                  negatives, outliers, overlap, privacy, profile, quantize,
+                  sampling, scrub, selection, semdedup, similarity,
+                  substring, textstats, tfidf, urlcuration, vocab)
+from .llm import sources as llm_sources
+from .sources import readers
 
 
 def _load(yaml_metadata) -> dict:
@@ -243,11 +267,10 @@ def parse_pit(yaml_metadata, name: str) -> PitConfig:
                      pit_type=m.get("pit_type"))
 
 
-def parse_bridge(yaml_metadata, name: str) -> "BridgeConfig":
+def parse_bridge(yaml_metadata, name: str) -> BridgeConfig:
     """Beyond-reference (operators/bridge.py): legs are mappings with
     link_entity/link_hk/from_hk/to_hk and optional eff_sat /
     eff_active_col, in traversal order."""
-    from .operators.bridge import BridgeConfig, BridgeLeg
     m = _load(yaml_metadata)
     legs = tuple(
         BridgeLeg(leg["link_entity"], leg["link_hk"], leg["from_hk"],
@@ -261,12 +284,11 @@ def parse_bridge(yaml_metadata, name: str) -> "BridgeConfig":
                             "snapshot_trigger_column"))
 
 
-def parse_vault_checks(yaml_metadata, name: str) -> "VaultChecksConfig":
+def parse_vault_checks(yaml_metadata, name: str) -> VaultChecksConfig:
     """Beyond-reference (operators/checks.py): the reference doc's
     soft-constraint test table as declarative YAML — each check is a
     mapping with entity/kind/columns and, for relationship,
     to_entity [+ to_columns]."""
-    from .operators.checks import Check, VaultChecksConfig
     m = _load(yaml_metadata)
     checks = tuple(
         Check(c["entity"], c["kind"], _tuple(c["columns"]),
@@ -392,9 +414,7 @@ def _dataclass_parser(cls):
     YAML key must be a dataclass field; YAML lists become tuples
     (recursively) to satisfy frozen-dataclass hashing. Unknown keys
     fail loudly — a typo'd knob must not silently keep its default."""
-    import dataclasses
-
-    field_names = {f.name for f in dataclasses.fields(cls)} - {"name"}
+    field_names = {f.name for f in fields(cls)} - {"name"}
 
     def _to_tuple(v):
         if isinstance(v, list):
@@ -413,226 +433,286 @@ def _dataclass_parser(cls):
     return parse_fn
 
 
-def _asof_config():
-    from .operators.asof import AsofJoinConfig
-    return AsofJoinConfig
+def _snap_v0_build(spark, reg, cfg, g, **_kw):
+    # build_snap_v0 takes no registry (pure generated spine)
+    return build_snap_v0(spark, cfg, g)
 
 
-def _events_configs():
-    from .operators.events import SessionizeConfig, HoppingAggConfig
-    return SessionizeConfig, HoppingAggConfig
+@dataclass(frozen=True)
+class Kind:
+    """One catalogue row: everything the engine knows about a kind."""
+
+    parse: callable          # (yaml_metadata, name) -> config
+    build: callable          # (spark, reg, cfg, g, **kw) -> DataFrame
+    materialize: str         # default: 'incremental' | 'table' | 'view'
+    deps: callable           # config -> names it reads (dbt's ref() calls)
+    config: type = None      # flat config class, parsed generically
 
 
-def _interval_config():
-    from .operators.rangejoin import IntervalJoinConfig
-    return IntervalJoinConfig
+def _reads_source_models(c) -> list:
+    return [s.name for s in c.source_models]
 
 
-def _funnel_config():
-    from .operators.events import FunnelConfig
-    return FunnelConfig
+def _reads_source(c) -> list:
+    return [c.source]
 
 
-def _cohort_config():
-    from .operators.events import CohortRetentionConfig
-    return CohortRetentionConfig
+def _flat(cls, build, deps=_reads_source) -> Kind:
+    """A training-data / analytics operator: a flat config parsed by
+    ``_dataclass_parser``, materialized as a full-rebuild table
+    (rerunning a project recomputes it from current inputs — dedup or
+    quality output is not incremental by nature)."""
+    return Kind(_dataclass_parser(cls), build, "table", deps, cls)
 
 
-def _diff_config():
-    from .operators.diff import TableDiffConfig
-    return TableDiffConfig
-
-
-def _llm_parsers() -> dict:
-    """kind -> parser for the beyond-reference training-data operators,
-    so a project YAML can declare the full curation pipeline alongside
-    the vault entities (plans/project.py wires the builders)."""
-    from .llm.dedup import (ExactDedupConfig, MinHashLshConfig,
-                            SimHashConfig, NgramJaccardConfig,
-                            EmbeddingCosineConfig, DupGroupsConfig)
-    from .llm.similarity import AnnConfig, IvfConfig
-    from .llm.textstats import (LangIdConfig, QualityConfig,
-                                TokenCountConfig, FingerprintConfig)
-    from .llm.multimodal import MultimodalConfig
-    from .llm.curation import CurationConfig, DedupReportConfig
-    from .llm.contamination import ContaminationConfig
-    from .llm.scrub import RepetitionConfig, PiiRedactConfig
-    from .llm.sampling import (DatasetMixConfig, SequencePackingConfig,
-                               PackingManifestConfig, CorpusShuffleConfig,
-                               TemperatureMixConfig,
-                               ProportionalSampleConfig)
-    from .llm.semdedup import SemDedupConfig
-    from .llm.quantize import ScalarQuantizeConfig
-    from .llm.substring import SubstringDupConfig
-    from .llm.tfidf import TfidfConfig
-    from .llm.sources import (SourceStatsConfig, SourceGateConfig,
-                              TokenBudgetConfig)
-    from .llm.chunking import (ChunkConfig, ChunkDedupConfig,
-                               ChunkScrubConfig)
-    from .llm.lm import BigramLmConfig, CcnetBucketsConfig
-    from .llm.vocab import VocabTopkConfig
-    from .llm.gopher import GopherRulesConfig
-    from .llm.boilerplate import BoilerplateConfig
-    from .llm.dsir import DsirConfig
-    from .llm.multimodal import MultimodalDecodeConfig
-    from .llm.profile import ProfileConfig, GroupedQuantilesConfig
-    from .llm.lineclean import LineCleanConfig
-    from .llm.selection import (CanonicalConfig, StratifiedSplitConfig,
-                                SourceCapConfig, KFoldConfig)
-    from .llm.incdedup import IncrementalDedupConfig
-    from .llm.profile import (HeavyHittersConfig, HistogramConfig,
-                              SufficientStatsConfig)
-    from .llm.vocab import GroupedVocabConfig
-    from .llm.sampling import ExactSampleConfig
-    from .llm.selection import QuantileGateConfig
-    from .operators.rollup import GroupingSetsConfig
-    from .operators.merge import Scd1MergeConfig
-    from .operators.jsonx import JsonExtractConfig
-    from .operators.pivot import PivotConfig
-    from .operators.quarantine import QuarantineConfig
-    from .operators.events import (TransitionMatrixConfig, LocfConfig,
-                                   RollingAggConfig, OhlcBarsConfig,
-                                   AttributionConfig,
-                                   ConversionPathConfig,
-                                   ActiveUsersConfig)
-    from .operators.linkage import BlockedLinkageConfig
-    from .llm.overlap import SourceOverlapConfig
-    from .operators.basket import CooccurrenceConfig
-    from .llm.privacy import KAnonymityConfig
-    from .sources.readers import PartitionedRoundtripConfig
-    from .operators.compaction import CompactionConfig
-    from .llm.selection import PercentileRankConfig
-    from .llm.profile import TrendingConfig
-    from .llm.lineclean import TextNormalizeConfig
-    from .llm.annindex import AnnIndexConfig
-    from .llm.urlcuration import UrlGateConfig
-    from .llm.outliers import TukeyOutlierConfig
-    from .llm.negatives import NegativeSamplesConfig
-    from .llm.profile import ProfileDriftConfig
-    from .llm.multimodal import (MultimodalFrameSampleConfig,
-                                 MultimodalResizeConfig,
-                                 WavDecodeConfig, WavStatsConfig,
-                                 UlawStatsConfig, PngDecodeConfig,
-                                 GifFramesConfig)
-
-    return {
-        "exact_dedup": _dataclass_parser(ExactDedupConfig),
-        "minhash_lsh": _dataclass_parser(MinHashLshConfig),
-        "simhash_dedup": _dataclass_parser(SimHashConfig),
-        "ngram_jaccard": _dataclass_parser(NgramJaccardConfig),
-        "embedding_cosine": _dataclass_parser(EmbeddingCosineConfig),
-        "dup_groups": _dataclass_parser(DupGroupsConfig),
-        "ann_topk": _dataclass_parser(AnnConfig),
-        "ann_ivf": _dataclass_parser(IvfConfig),
-        "langid": _dataclass_parser(LangIdConfig),
-        "quality": _dataclass_parser(QualityConfig),
-        "token_count": _dataclass_parser(TokenCountConfig),
-        "fingerprint": _dataclass_parser(FingerprintConfig),
-        "multimodal": _dataclass_parser(MultimodalConfig),
-        "curation": _dataclass_parser(CurationConfig),
-        "contamination": _dataclass_parser(ContaminationConfig),
-        "repetition": _dataclass_parser(RepetitionConfig),
-        "pii_redact": _dataclass_parser(PiiRedactConfig),
-        "dataset_mix": _dataclass_parser(DatasetMixConfig),
-        "sequence_packing": _dataclass_parser(SequencePackingConfig),
-        "semdedup": _dataclass_parser(SemDedupConfig),
-        "scalar_quantize": _dataclass_parser(ScalarQuantizeConfig),
-        "substring_dup": _dataclass_parser(SubstringDupConfig),
-        "tfidf": _dataclass_parser(TfidfConfig),
-        "packing_manifest": _dataclass_parser(PackingManifestConfig),
-        "corpus_shuffle": _dataclass_parser(CorpusShuffleConfig),
-        "temperature_mix": _dataclass_parser(TemperatureMixConfig),
-        "dedup_report": _dataclass_parser(DedupReportConfig),
-        "source_stats": _dataclass_parser(SourceStatsConfig),
-        "source_gate": _dataclass_parser(SourceGateConfig),
-        "token_budget": _dataclass_parser(TokenBudgetConfig),
-        "doc_chunks": _dataclass_parser(ChunkConfig),
-        "chunk_dedup": _dataclass_parser(ChunkDedupConfig),
-        "chunk_scrub": _dataclass_parser(ChunkScrubConfig),
-        "lm_score": _dataclass_parser(BigramLmConfig),
-        "ccnet_buckets": _dataclass_parser(CcnetBucketsConfig),
-        "vocab_topk": _dataclass_parser(VocabTopkConfig),
-        "gopher_rules": _dataclass_parser(GopherRulesConfig),
-        "boilerplate_removal": _dataclass_parser(BoilerplateConfig),
-        "dsir_score": _dataclass_parser(DsirConfig),
-        "multimodal_decode": _dataclass_parser(MultimodalDecodeConfig),
-        "decontaminate": _dataclass_parser(ContaminationConfig),
-        "dataset_profile": _dataclass_parser(ProfileConfig),
-        "grouped_quantiles": _dataclass_parser(GroupedQuantilesConfig),
-        "line_clean": _dataclass_parser(LineCleanConfig),
-        "canonical_selection": _dataclass_parser(CanonicalConfig),
-        "stratified_split": _dataclass_parser(StratifiedSplitConfig),
-        "source_cap": _dataclass_parser(SourceCapConfig),
-        "incremental_dedup": _dataclass_parser(IncrementalDedupConfig),
-        "asof_join": _dataclass_parser(_asof_config()),
-        "sessionize": _dataclass_parser(_events_configs()[0]),
-        "funnel": _dataclass_parser(_funnel_config()),
-        "cohort_retention": _dataclass_parser(_cohort_config()),
-        "table_diff": _dataclass_parser(_diff_config()),
-        "hopping_agg": _dataclass_parser(_events_configs()[1]),
-        "interval_join": _dataclass_parser(_interval_config()),
-        "grouping_sets": _dataclass_parser(GroupingSetsConfig),
-        "scd1_merge": _dataclass_parser(Scd1MergeConfig),
-        "json_extract": _dataclass_parser(JsonExtractConfig),
-        "pivot": _dataclass_parser(PivotConfig),
-        "quarantine": _dataclass_parser(QuarantineConfig),
-        "heavy_hitters": _dataclass_parser(HeavyHittersConfig),
-        "histogram": _dataclass_parser(HistogramConfig),
-        "sufficient_stats": _dataclass_parser(SufficientStatsConfig),
-        "grouped_vocab": _dataclass_parser(GroupedVocabConfig),
-        "exact_sample": _dataclass_parser(ExactSampleConfig),
-        "quantile_gate": _dataclass_parser(QuantileGateConfig),
-        "transition_matrix": _dataclass_parser(TransitionMatrixConfig),
-        "locf": _dataclass_parser(LocfConfig),
-        "rolling_agg": _dataclass_parser(RollingAggConfig),
-        "blocked_linkage": _dataclass_parser(BlockedLinkageConfig),
-        "source_overlap": _dataclass_parser(SourceOverlapConfig),
-        "cooccurrence": _dataclass_parser(CooccurrenceConfig),
-        "ohlc_bars": _dataclass_parser(OhlcBarsConfig),
-        "attribution": _dataclass_parser(AttributionConfig),
-        "k_anonymity": _dataclass_parser(KAnonymityConfig),
-        "partitioned_roundtrip": _dataclass_parser(
-            PartitionedRoundtripConfig),
-        "compaction": _dataclass_parser(CompactionConfig),
-        "percentile_rank": _dataclass_parser(PercentileRankConfig),
-        "trending_topk": _dataclass_parser(TrendingConfig),
-        "text_normalize": _dataclass_parser(TextNormalizeConfig),
-        "conversion_paths": _dataclass_parser(ConversionPathConfig),
-        "active_users": _dataclass_parser(ActiveUsersConfig),
-        "proportional_sample": _dataclass_parser(
-            ProportionalSampleConfig),
-        "ann_index": _dataclass_parser(AnnIndexConfig),
-        "url_gate": _dataclass_parser(UrlGateConfig),
-        "tukey_outliers": _dataclass_parser(TukeyOutlierConfig),
-        "negative_samples": _dataclass_parser(NegativeSamplesConfig),
-        "profile_drift": _dataclass_parser(ProfileDriftConfig),
-        "frame_sample": _dataclass_parser(MultimodalFrameSampleConfig),
-        "image_resize": _dataclass_parser(MultimodalResizeConfig),
-        "wav_decode": _dataclass_parser(WavDecodeConfig),
-        "wav_stats": _dataclass_parser(WavStatsConfig),
-        "ulaw_stats": _dataclass_parser(UlawStatsConfig),
-        "png_decode": _dataclass_parser(PngDecodeConfig),
-        "gif_frames": _dataclass_parser(GifFramesConfig),
-        "kfold": _dataclass_parser(KFoldConfig),
-    }
-
-
-PARSERS = {
-    "stage": parse_stage, "hub": parse_hub, "link": parse_link,
-    "sat_v0": parse_sat_v0, "sat_v1": parse_sat_v1,
-    "nh_sat": parse_nh_sat, "nh_link": parse_nh_link,
-    "ma_sat_v0": parse_ma_sat_v0, "ma_sat_v1": parse_ma_sat_v1,
-    "rec_track_sat": parse_rec_track_sat,
-    "eff_sat_v0": parse_eff_sat_v0, "pit": parse_pit,
-    "bridge": parse_bridge, "vault_checks": parse_vault_checks,
-    "ref_hub": parse_ref_hub, "ref_sat_v0": parse_ref_sat_v0,
-    "ref_sat_v1": parse_ref_sat_v1, "ref_table": parse_ref_table,
-    "control_snap_v0": parse_control_snap_v0,
-    "control_snap_v1": parse_control_snap_v1,
-    **_llm_parsers(),
+# The kind catalogue: the one place a kind is declared. yaml_api.parse,
+# plans/project.load_project and the fixtures' entity index all read it.
+# Materialization defaults mirror the reference's dbt_project.yml:
+# stages and virtual end-dating (v1) entities are views, the snapshot
+# spine is a (small) table, every other vault entity loads
+# incrementally.
+KINDS = {
+    "stage": Kind(parse_stage, build_stage, "view",
+                  lambda c: [c.source_model]
+                  + [p.ref_model for p in c.prejoined_columns]),
+    "hub": Kind(parse_hub, build_hub, "incremental", _reads_source_models),
+    "link": Kind(parse_link, build_link, "incremental", _reads_source_models),
+    "sat_v0": Kind(parse_sat_v0, build_sat_v0, "incremental",
+                   lambda c: [c.source_model]),
+    "sat_v1": Kind(parse_sat_v1, build_sat_v1, "view", lambda c: [c.sat_v0]),
+    "nh_sat": Kind(parse_nh_sat, build_nh_sat, "incremental",
+                   lambda c: [c.source_model]),
+    "nh_link": Kind(parse_nh_link, build_nh_link, "incremental",
+                    _reads_source_models),
+    "ma_sat_v0": Kind(parse_ma_sat_v0, build_ma_sat_v0, "incremental",
+                      lambda c: [c.source_model]),
+    "ma_sat_v1": Kind(parse_ma_sat_v1, build_ma_sat_v1, "view",
+                      lambda c: [c.ma_sat_v0]),
+    "rec_track_sat": Kind(parse_rec_track_sat, build_rec_track_sat,
+                          "incremental", _reads_source_models),
+    "eff_sat_v0": Kind(parse_eff_sat_v0, build_eff_sat_v0, "incremental",
+                       lambda c: [c.source_model]),
+    "ref_hub": Kind(parse_ref_hub, build_ref_hub, "incremental",
+                    _reads_source_models),
+    "ref_sat_v0": Kind(parse_ref_sat_v0, build_ref_sat_v0, "incremental",
+                       lambda c: [c.source_model]),
+    "ref_sat_v1": Kind(parse_ref_sat_v1, build_ref_sat_v1, "view",
+                       lambda c: [c.ref_sat_v0]),
+    "ref_table": Kind(parse_ref_table, build_ref_table, "view",
+                      lambda c: [c.ref_hub] + [s for s, _ in c.ref_satellites]
+                      + ([c.snapshot_relation] if c.snapshot_relation
+                         else [])),
+    "control_snap_v0": Kind(parse_control_snap_v0, _snap_v0_build, "table",
+                            lambda c: []),
+    "control_snap_v1": Kind(parse_control_snap_v1, build_snap_v1, "view",
+                            lambda c: [c.snap_v0]),
+    "pit": Kind(parse_pit, build_pit, "incremental",
+                lambda c: [c.tracked_entity, c.snapshot_relation]
+                + list(c.sat_names)),
+    "bridge": Kind(parse_bridge, build_bridge, "incremental",
+                   lambda c: [c.base_entity, c.snapshot_relation]
+                   + [leg.link_entity for leg in c.legs]
+                   + [leg.eff_sat for leg in c.legs if leg.eff_sat]),
+    # the dbt-test analogue runs AFTER its checked entities; a rerun
+    # rebuilds the report (table, never incremental). Deps are a sorted
+    # SET: per-check multiplicity would make the fixtures persist
+    # entities named by several checks, and each check branch prunes to
+    # 1-2 columns while a cache materializes all of them (measured
+    # 2.59 -> 2.97 s min-of-4 at sf0.1 with those persists on).
+    "vault_checks": Kind(parse_vault_checks, build_vault_checks, "table",
+                         lambda c: sorted({ch.entity for ch in c.checks}
+                                          | {ch.to_entity for ch in c.checks
+                                             if ch.to_entity})),
+    "exact_dedup": _flat(dedup.ExactDedupConfig, dedup.build_exact_dedup),
+    "minhash_lsh": _flat(dedup.MinHashLshConfig, dedup.build_minhash_lsh),
+    "simhash_dedup": _flat(dedup.SimHashConfig, dedup.build_simhash_dedup),
+    "ngram_jaccard": _flat(dedup.NgramJaccardConfig,
+                           dedup.build_ngram_jaccard),
+    "embedding_cosine": _flat(dedup.EmbeddingCosineConfig,
+                              dedup.build_embedding_cosine),
+    "dup_groups": _flat(dedup.DupGroupsConfig, dedup.build_dup_groups,
+                        lambda c: [c.pairs_entity]),
+    "ann_topk": _flat(similarity.AnnConfig, similarity.build_ann_topk),
+    "ann_ivf": _flat(similarity.IvfConfig, similarity.build_ann_ivf),
+    # stages its index store internally; the RESULT is a full rebuild
+    "ann_index": _flat(annindex.AnnIndexConfig,
+                       annindex.build_ann_index_persisted),
+    "langid": _flat(textstats.LangIdConfig, textstats.build_langid),
+    "quality": _flat(textstats.QualityConfig, textstats.build_quality),
+    "token_count": _flat(textstats.TokenCountConfig,
+                         textstats.build_token_count),
+    "fingerprint": _flat(textstats.FingerprintConfig,
+                         textstats.build_fingerprint),
+    "multimodal": _flat(multimodal.MultimodalConfig,
+                        multimodal.build_multimodal_features),
+    "multimodal_decode": _flat(multimodal.MultimodalDecodeConfig,
+                               multimodal.build_multimodal_decode),
+    "frame_sample": _flat(multimodal.MultimodalFrameSampleConfig,
+                          multimodal.build_multimodal_framesample),
+    "image_resize": _flat(multimodal.MultimodalResizeConfig,
+                          multimodal.build_multimodal_resize),
+    "wav_decode": _flat(multimodal.WavDecodeConfig,
+                        multimodal.build_wav_decode),
+    "wav_stats": _flat(multimodal.WavStatsConfig,
+                       multimodal.build_wav_stats),
+    "ulaw_stats": _flat(multimodal.UlawStatsConfig,
+                        multimodal.build_ulaw_stats),
+    "png_decode": _flat(multimodal.PngDecodeConfig,
+                        multimodal.build_png_decode),
+    "gif_frames": _flat(multimodal.GifFramesConfig,
+                        multimodal.build_gif_frames),
+    "curation": _flat(curation.CurationConfig, curation.build_curation,
+                      lambda c: [c.quality_entity, c.langid_entity]
+                      + ([c.canonical_entity] if c.canonical_entity
+                         else [c.dedup_entity])
+                      + ([c.repetition_entity] if c.repetition_entity
+                         else [])),
+    "dedup_report": _flat(curation.DedupReportConfig,
+                          curation.build_dedup_report,
+                          lambda c: [c.langid_entity, c.quality_entity,
+                                     c.groups_entity]),
+    "contamination": _flat(contamination.ContaminationConfig,
+                           contamination.build_contamination),
+    "decontaminate": _flat(contamination.ContaminationConfig,
+                           contamination.build_decontaminated),
+    "repetition": _flat(scrub.RepetitionConfig, scrub.build_repetition),
+    "pii_redact": _flat(scrub.PiiRedactConfig, scrub.build_pii_redact),
+    "dataset_mix": _flat(sampling.DatasetMixConfig,
+                         sampling.build_dataset_mix),
+    "sequence_packing": _flat(sampling.SequencePackingConfig,
+                              sampling.build_sequence_packing),
+    "packing_manifest": _flat(sampling.PackingManifestConfig,
+                              sampling.build_packing_manifest),
+    "corpus_shuffle": _flat(sampling.CorpusShuffleConfig,
+                            sampling.build_corpus_shuffle),
+    "temperature_mix": _flat(sampling.TemperatureMixConfig,
+                             sampling.build_temperature_mix),
+    "exact_sample": _flat(sampling.ExactSampleConfig,
+                          sampling.build_exact_sample),
+    "proportional_sample": _flat(sampling.ProportionalSampleConfig,
+                                 sampling.build_proportional_sample),
+    "semdedup": _flat(semdedup.SemDedupConfig, semdedup.build_semdedup),
+    "scalar_quantize": _flat(quantize.ScalarQuantizeConfig,
+                             quantize.build_scalar_quantize),
+    "substring_dup": _flat(substring.SubstringDupConfig,
+                           substring.build_substring_dup),
+    "tfidf": _flat(tfidf.TfidfConfig, tfidf.build_tfidf),
+    "source_stats": _flat(llm_sources.SourceStatsConfig,
+                          llm_sources.build_source_stats),
+    "source_gate": _flat(llm_sources.SourceGateConfig,
+                         llm_sources.build_source_gate,
+                         lambda c: [c.stats_entity]),
+    "token_budget": _flat(llm_sources.TokenBudgetConfig,
+                          llm_sources.build_token_budget),
+    "doc_chunks": _flat(chunking.ChunkConfig, chunking.build_doc_chunks),
+    "chunk_dedup": _flat(chunking.ChunkDedupConfig,
+                         chunking.build_chunk_dedup,
+                         lambda c: [c.chunks_entity]),
+    "chunk_scrub": _flat(chunking.ChunkScrubConfig,
+                         chunking.build_chunk_scrub),
+    "lm_score": _flat(lm.BigramLmConfig, lm.build_lm_score),
+    "ccnet_buckets": _flat(lm.CcnetBucketsConfig, lm.build_ccnet_buckets,
+                           lambda c: [c.source, c.score_entity]),
+    "vocab_topk": _flat(vocab.VocabTopkConfig, vocab.build_vocab_topk),
+    "grouped_vocab": _flat(vocab.GroupedVocabConfig,
+                           vocab.build_grouped_vocab),
+    "gopher_rules": _flat(gopher.GopherRulesConfig,
+                          gopher.build_gopher_rules),
+    "boilerplate_removal": _flat(boilerplate.BoilerplateConfig,
+                                 boilerplate.build_boilerplate_removal),
+    "dsir_score": _flat(dsir.DsirConfig, dsir.build_dsir_score),
+    "dataset_profile": _flat(profile.ProfileConfig,
+                             profile.build_dataset_profile),
+    "grouped_quantiles": _flat(profile.GroupedQuantilesConfig,
+                               profile.build_grouped_quantiles),
+    "heavy_hitters": _flat(profile.HeavyHittersConfig,
+                           profile.build_heavy_hitters),
+    "histogram": _flat(profile.HistogramConfig, profile.build_histogram),
+    "sufficient_stats": _flat(profile.SufficientStatsConfig,
+                              profile.build_sufficient_stats),
+    "trending_topk": _flat(profile.TrendingConfig,
+                           profile.build_trending_topk),
+    "profile_drift": _flat(profile.ProfileDriftConfig,
+                           profile.build_profile_drift),
+    "line_clean": _flat(lineclean.LineCleanConfig,
+                        lineclean.build_line_clean),
+    "text_normalize": _flat(lineclean.TextNormalizeConfig,
+                            lineclean.build_text_normalize),
+    "canonical_selection": _flat(selection.CanonicalConfig,
+                                 selection.build_canonical_selection,
+                                 lambda c: [c.groups_entity,
+                                            c.quality_entity]),
+    "stratified_split": _flat(selection.StratifiedSplitConfig,
+                              selection.build_stratified_split),
+    "source_cap": _flat(selection.SourceCapConfig,
+                        selection.build_source_cap,
+                        lambda c: [c.source, c.quality_entity]),
+    "quantile_gate": _flat(selection.QuantileGateConfig,
+                           selection.build_quantile_gate),
+    "percentile_rank": _flat(selection.PercentileRankConfig,
+                             selection.build_percentile_rank),
+    "kfold": _flat(selection.KFoldConfig, selection.build_kfold),
+    # runs its own store loop internally; as a project entity the
+    # RESULT is still a full-rebuild table (the internal index is
+    # scratch state, not the materialization)
+    "incremental_dedup": _flat(incdedup.IncrementalDedupConfig,
+                               incdedup.build_incremental_dedup),
+    "source_overlap": _flat(overlap.SourceOverlapConfig,
+                            overlap.build_source_overlap),
+    "k_anonymity": _flat(privacy.KAnonymityConfig,
+                         privacy.build_k_anonymity),
+    "url_gate": _flat(urlcuration.UrlGateConfig, urlcuration.build_url_gate),
+    "tukey_outliers": _flat(outliers.TukeyOutlierConfig,
+                            outliers.build_tukey_outliers),
+    "negative_samples": _flat(negatives.NegativeSamplesConfig,
+                              negatives.build_negative_samples),
+    "asof_join": _flat(asof.AsofJoinConfig, asof.build_asof_join,
+                       lambda c: [c.left_entity, c.right_entity]),
+    "sessionize": _flat(events.SessionizeConfig, events.build_sessionize),
+    "funnel": _flat(events.FunnelConfig, events.build_funnel),
+    "cohort_retention": _flat(events.CohortRetentionConfig,
+                              events.build_cohort_retention),
+    "hopping_agg": _flat(events.HoppingAggConfig, events.build_hopping_agg),
+    "transition_matrix": _flat(events.TransitionMatrixConfig,
+                               events.build_transition_matrix),
+    "locf": _flat(events.LocfConfig, events.build_locf),
+    "rolling_agg": _flat(events.RollingAggConfig, events.build_rolling_agg),
+    "ohlc_bars": _flat(events.OhlcBarsConfig, events.build_ohlc_bars),
+    "attribution": _flat(events.AttributionConfig,
+                         events.build_attribution),
+    "conversion_paths": _flat(events.ConversionPathConfig,
+                              events.build_conversion_paths),
+    "active_users": _flat(events.ActiveUsersConfig,
+                          events.build_active_users),
+    "table_diff": _flat(diff.TableDiffConfig, diff.build_table_diff,
+                        lambda c: [c.left_entity, c.right_entity]),
+    "interval_join": _flat(rangejoin.IntervalJoinConfig,
+                           rangejoin.build_interval_join,
+                           lambda c: [c.points_entity, c.intervals_entity]),
+    "grouping_sets": _flat(rollup.GroupingSetsConfig,
+                           rollup.build_grouping_sets),
+    # runs its own store loop internally; the RESULT is a full rebuild
+    # (the incremental_dedup note above applies)
+    "scd1_merge": _flat(merge.Scd1MergeConfig, merge.build_scd1_merge),
+    "json_extract": _flat(jsonx.JsonExtractConfig, jsonx.build_json_extract),
+    "pivot": _flat(pivot.PivotConfig, pivot.build_pivot),
+    "quarantine": _flat(quarantine.QuarantineConfig,
+                        quarantine.build_quarantine),
+    "blocked_linkage": _flat(linkage.BlockedLinkageConfig,
+                             linkage.build_blocked_linkage),
+    "cooccurrence": _flat(basket.CooccurrenceConfig,
+                          basket.build_cooccurrence),
+    # both stage scratch copies internally; the RESULT is a full
+    # rebuild (the incremental_dedup note above applies)
+    "compaction": _flat(compaction.CompactionConfig,
+                        compaction.build_compaction),
+    "partitioned_roundtrip": _flat(readers.PartitionedRoundtripConfig,
+                                   readers.build_partitioned_roundtrip),
 }
+
+PARSERS = {kind: k.parse for kind, k in KINDS.items()}
 
 
 def parse(kind: str, yaml_metadata, name: str):
     """Generic entry: parse(kind, yaml_metadata, name) -> config."""
-    return PARSERS[kind](yaml_metadata, name)
+    return KINDS[kind].parse(yaml_metadata, name)

@@ -2,9 +2,12 @@
 same results as the equivalent dataclass configs, including build-time
 schema introspection (no source_schema in the YAML)."""
 
-from pyspark.sql import functions as F
+import dataclasses
+
+import yaml
 
 from datavault4dbt_spark import fixtures, yaml_api
+from datavault4dbt_spark.plans.project import load_project
 from datavault4dbt_spark.context import testdata_registry as make_registry
 from datavault4dbt_spark.operators.stage import build_stage
 from datavault4dbt_spark.operators.hub import build_hub
@@ -272,64 +275,37 @@ payload_cols: [l_returnflag]
 """, name="lineitem_quarantine")
     assert q == fixtures.QUARANTINES["lineitem_quarantine"]
 
-    for kind, yml, family, fname in (
-        ("heavy_hitters", "source: events\ncolumns: [event_type, user_id]\nk: 8\n",
-         fixtures.HEAVY_HITTERS, "events_skew_profile"),
-        ("histogram", "source: documents\nvalue_col: n_chars\nn_bins: 12\n",
-         fixtures.HISTOGRAMS, "docs_length_histogram"),
-        ("sufficient_stats",
-         "source: lineitem\ngroup_col: l_returnflag\n"
-         "x_expr: CAST(round(l_quantity) AS BIGINT)\n"
-         "y_expr: CAST(round(l_extendedprice) AS BIGINT)\n",
-         fixtures.SUFFICIENT_STATS, "lineitem_qty_price_stats"),
-        ("grouped_vocab", "", fixtures.GROUPED_VOCABS,
-         "vocab_topk_by_lang"),
-        ("exact_sample", "n_per_stratum: 10\n", fixtures.EXACT_SAMPLES,
-         "docs_exact_sample"),
-        ("quantile_gate", "p_lo: 10\np_hi: 90\n", fixtures.QUANTILE_GATES,
-         "docs_length_gate"),
-        ("transition_matrix", "", fixtures.TRANSITIONS,
-         "event_transitions"),
-        ("locf",
-         "value_expr: CASE WHEN event_type = 'error' THEN NULL "
-         "ELSE value END\n", fixtures.LOCFS, "events_value_locf"),
-        ("rolling_agg", "", fixtures.ROLLING, "events_rolling_value"),
-    ):
-        cfg = yaml_api.parse(kind, yml, name=fname)
-        assert cfg == family[fname], kind
+
+def _yaml_value(v):
+    """``dataclasses.asdict`` output as YAML-safe values: tuples (the
+    frozen configs' sequences) become lists."""
+    if isinstance(v, (tuple, list)):
+        return [_yaml_value(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _yaml_value(x) for k, x in v.items()}
+    return v
 
 
-def test_round10_kind_parsers_roundtrip():
-    # every round-10 kind routes through the generic parser and
-    # reproduces the declared fixture configs exactly
-    for kind, yml, family, fname in (
-        ("blocked_linkage",
-         "source: part\nid_col: p_partkey\ntext_col: p_name\n"
-         "block_cols: [p_brand, p_size]\nmax_distance: 3\n",
-         fixtures.LINKAGES, "part_name_linkage"),
-        ("source_overlap", "", fixtures.SOURCE_OVERLAPS,
-         "source_overlap_matrix"),
-        ("cooccurrence",
-         "min_item_support: 25\nmin_pair_support: 2\n",
-         fixtures.COOCCURRENCES, "part_cooccurrence"),
-        ("ohlc_bars", "", fixtures.OHLC_BARS, "events_ohlc_hourly"),
-        ("attribution", "", fixtures.ATTRIBUTIONS, "events_last_touch"),
-        ("k_anonymity", "", fixtures.K_ANONYMITIES, "docs_k_anonymity"),
-        ("partitioned_roundtrip", "", fixtures.PARTITIONED_ROUNDTRIPS,
-         "docs_partitioned_en"),
-        ("compaction", "fragment_files: 24\n", fixtures.COMPACTIONS,
-         "docs_compacted"),
-        ("percentile_rank", "", fixtures.PERCENTILE_RANKS,
-         "docs_length_pr"),
-        ("trending_topk", "", fixtures.TRENDINGS,
-         "events_trending_daily"),
-        ("text_normalize", "", fixtures.NORMALIZES, "docs_normalized"),
-        ("conversion_paths", "max_touches: 5\n",
-         fixtures.CONVERSION_PATHS, "events_conversion_paths"),
-        ("active_users", "window_days: 7\n", fixtures.ACTIVE_USERS,
-         "events_active_users"),
-        ("proportional_sample", "total_n: 97\n",
-         fixtures.PROPORTIONAL_SAMPLES, "docs_proportional_sample"),
-    ):
-        cfg = yaml_api.parse(kind, yml, name=fname)
-        assert cfg == family[fname], kind
+def test_flat_kind_fixtures_load_from_project(tmp_path):
+    """Every fixture entity of every flat catalogue kind, written as a
+    project file (its config as YAML, without name), loads back through
+    load_project to the fixture's config, builder and dependencies."""
+    idx = fixtures._index()
+    kinds = {}
+    for configs, kind, *_ in fixtures._FAMILIES:
+        if isinstance(kind, str) and yaml_api.KINDS[kind].config:
+            for name, cfg in configs.items():
+                doc = {k: _yaml_value(v)
+                       for k, v in dataclasses.asdict(cfg).items()
+                       if k != "name"}
+                (tmp_path / f"{name}.yml").write_text(
+                    yaml.safe_dump({"kind": kind, **doc}))
+                kinds[name] = kind
+    decls = load_project(str(tmp_path))
+    assert sorted(decls) == sorted(kinds)
+    for name, d in decls.items():
+        cfg, build, _orc, deps = idx[name]
+        assert d.cfg == cfg, name
+        assert d.build is build, name
+        assert [x for x in d.deps if x in idx] == deps(cfg), name
+        assert d.materialize == "table", name
