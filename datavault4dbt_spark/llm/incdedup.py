@@ -29,8 +29,7 @@ At 100 TB the index is the persisted state: appends are insert-only,
 the per-batch cost is one batch scan plus one hash join against the
 index on (band, sig), and the daily batch never rescans the corpus.
 (Bucketing the index table by `sig` would co-locate that join across
-runs — plans/bucketing.py; not done here to keep the scratch store
-layout-free.)
+runs; not done here, to keep the scratch store layout-free.)
 
 Oracle: the one-shot rule is SQL-expressible — kept(d) iff d never
 appears as the HIGHER id of a candidate pair — so the oracle is the

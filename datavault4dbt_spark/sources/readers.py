@@ -3,9 +3,9 @@
 The reference owns no I/O — dbt's ``ref()``/``source()`` resolve
 relations and the warehouse reads them (SURVEY §2.3 Scan/source). In
 this engine the :class:`~..context.Registry` plays that role; this
-module provides the readers that populate it from storage: batch and
-streaming, parquet/csv/json/orc (Delta when the runtime has
-delta-spark installed — gated import, not required).
+module provides the batch readers that populate it from storage:
+parquet/csv/json/orc (Delta when the runtime has delta-spark installed
+— gated import, not required).
 
 Scale notes: readers pass schemas explicitly where known (no inference
 scan), push options straight to the DataSource (so Catalyst pushdown /
@@ -48,18 +48,6 @@ def read_source(spark, cfg: SourceConfig):
     r = spark.read.format(cfg.format)
     if cfg.schema:
         r = r.schema(cfg.schema)
-    for k, v in cfg.options:
-        r = r.option(k, v)
-    return r.load(cfg.path)
-
-
-def open_source_stream(spark, cfg: SourceConfig, max_files_per_trigger: int = 10):
-    """Streaming variant (file source). Schema is mandatory for
-    streaming file sources; when absent it is borrowed from a one-off
-    batch read of the same location."""
-    schema = cfg.schema or read_source(spark, cfg).schema
-    r = (spark.readStream.format(cfg.format).schema(schema)
-         .option("maxFilesPerTrigger", max_files_per_trigger))
     for k, v in cfg.options:
         r = r.option(k, v)
     return r.load(cfg.path)

@@ -27,20 +27,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..operators.asof import AsofJoinConfig, asof_join_frames
+from .staging import start_available_now
 
 
 def start_asof_state_join(stream_events: DataFrame, state: DataFrame,
                           cfg: AsofJoinConfig, sink,
-                          checkpoint_dir: str,
-                          available_now: bool = True):
+                          checkpoint_dir: str):
     """``sink``: callable(DataFrame) invoked with each micro-batch's
     as-of-joined rows (e.g. ``lambda df: store.append("enriched",
     df)``)."""
     def join_batch(batch_df: DataFrame, _batch_id: int):
         sink(asof_join_frames(batch_df, state, cfg))
 
-    writer = (stream_events.writeStream.foreachBatch(join_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_available_now(
+        stream_events.writeStream.foreachBatch(join_batch), checkpoint_dir)

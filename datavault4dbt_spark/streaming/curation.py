@@ -29,6 +29,7 @@ from ..llm.textstats import (DEFAULT_LEXICONS, DEFAULT_STOPWORDS,
                              _lang_hits, langid_cascade_expr,
                              quality_score_expr)
 from .dedup import streaming_exact_dedup
+from .staging import start_available_now
 
 
 def streaming_curation(docs: DataFrame, *, id_col: str = "doc_id",
@@ -105,8 +106,7 @@ def streaming_source_gate(stream_docs: DataFrame, stats: DataFrame,
 
 
 def start_contamination_gate(stream_docs: DataFrame, eval_grams: DataFrame,
-                             cfg, sink, checkpoint_dir: str,
-                             available_now: bool = True):
+                             cfg, sink, checkpoint_dir: str):
     """Decontaminate an ARRIVING training stream against a static
     benchmark gram set (round-7, judge r6 #6): each micro-batch runs
     the SAME ``llm.contamination.contamination_gate`` the batch path
@@ -128,16 +128,13 @@ def start_contamination_gate(stream_docs: DataFrame, eval_grams: DataFrame,
     def gate_batch(batch_df: DataFrame, _batch_id: int):
         sink(contamination_gate(batch_df, eval_grams, cfg))
 
-    writer = (stream_docs.writeStream.foreachBatch(gate_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_available_now(
+        stream_docs.writeStream.foreachBatch(gate_batch), checkpoint_dir)
 
 
 def start_ccnet_gate(stream_docs: DataFrame, model: tuple,
                      cuts: DataFrame, lm_cfg, sink, checkpoint_dir: str,
-                     lang_col: str = "lang", available_now: bool = True):
+                     lang_col: str = "lang"):
     """CCNet quality-gate an ARRIVING crawl stream: score each
     micro-batch's documents against a STATIC trained bigram model
     (``llm.lm.lm_model_frames`` over the reference corpus — CCNet's
@@ -170,11 +167,8 @@ def start_ccnet_gate(stream_docs: DataFrame, model: tuple,
         out = ccnet_assign_frame(scored, cuts, lm_cfg.id_col)
         sink(out.filter(F.col("keep")))
 
-    writer = (stream_docs.writeStream.foreachBatch(gate_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_available_now(
+        stream_docs.writeStream.foreachBatch(gate_batch), checkpoint_dir)
 
 
 def streaming_temperature_gate(stream_docs: DataFrame, rates: DataFrame,

@@ -73,13 +73,8 @@ def build_streaming_dropdup(spark, reg: Registry,
                             cfg: StreamingDropDupEntityConfig,
                             g: GlobalConfig = DEFAULT) -> DataFrame:
     """Stage inflated arrivals -> native dropDuplicatesWithinWatermark
-    -> read the sink. Scratch dirs are cleared per run so repeated
-    driver/bench invocations re-execute the full streaming load."""
-    import os
-    import shutil
-
-    from ..plans.incremental import scratch_store
-    from .staging import EPOCH_COL, scoped_stream_shuffle, stage_epoch_frames
+    -> read the sink."""
+    from .staging import _STREAM_SHUFFLE_DEFAULT, EPOCH_COL, run_arrivals
     from .stateful import _check_ts_stats, _ts_stats, _with_time_epoch
 
     ev = (reg.load(spark, cfg.source)
@@ -102,12 +97,6 @@ def build_streaming_dropdup(spark, reg: Registry,
             f"NULL-key dedup is not portable across engines (module "
             f"note)")
     _check_ts_stats(stats)
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_streamddup")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    out_dir = store.path("deduped")
-    for p in (src_dir, ckpt_dir, out_dir):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(src_dir)
 
     tagged = _with_time_epoch(ev, stats, cfg.n_batches)
     epoch = F.col(EPOCH_COL)
@@ -121,23 +110,15 @@ def build_streaming_dropdup(spark, reg: Registry,
         tagged.filter((epoch < cfg.n_batches - 1)
                       & (F.col("event_id") % cfg.cross_mod == 0))
         .withColumn(EPOCH_COL, epoch + 1))
-    stage_epoch_frames(arrivals, cfg.n_batches, src_dir)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir)
-              .withWatermark("ts", cfg.watermark)
-              .dropDuplicatesWithinWatermark(["event_id"]))
-    with scoped_stream_shuffle(spark):
-        q = (stream.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-        if q.exception() is not None:
-            raise q.exception()
-    return spark.read.parquet(out_dir)
+    store = run_arrivals(
+        spark, cfg.name, arrivals, cfg.n_batches,
+        lambda stream, store: (
+            stream.withWatermark("ts", cfg.watermark)
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .writeStream.format("parquet")
+            .option("path", store.path("deduped"))),
+        state_partitions=_STREAM_SHUFFLE_DEFAULT)
+    return spark.read.parquet(store.path("deduped"))
 
 
 def streaming_dropdup_oracle(b: SqlBuilder, reg: Registry,

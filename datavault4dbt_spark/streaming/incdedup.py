@@ -41,8 +41,10 @@ from ..llm.dedup import MinHashLshConfig, minhash_bucket_frame
 from ..llm.incdedup import (IncrementalDedupConfig, append_batch_index,
                             incremental_dedup_oracle, process_dedup_batch,
                             _batch_expr)
-from ..plans.incremental import ParquetStore, scratch_store
+from ..plans.incremental import ParquetStore
 from ..plans.sqlbuild import SqlBuilder
+from .staging import (ARRIVALS, EPOCH_COL, read_arrivals, run_arrivals,
+                      start_available_now)
 
 
 @dataclass(frozen=True)
@@ -53,20 +55,12 @@ class StreamingDedupConfig:
     shingle_n: int = 3
     num_perm: int = 16
     bands: int = 4
-    max_files_per_trigger: int = 1
 
     def minhash(self) -> MinHashLshConfig:
         return MinHashLshConfig(
             "stream_dedup__mh", id_col=self.id_col,
             text_col=self.text_col, shingle_n=self.shingle_n,
             num_perm=self.num_perm, bands=self.bands)
-
-
-def open_document_stream(spark, cfg: StreamingDedupConfig,
-                         schema) -> DataFrame:
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-            .parquet(cfg.source_dir))
 
 
 def _has_epoch(store: ParquetStore, table: str, epoch: int) -> bool:
@@ -113,12 +107,10 @@ def start_dedup_stream(spark, cfg: StreamingDedupConfig,
     """Wire stream -> foreachBatch(dedup) and start it. Returns the
     StreamingQuery; verdicts land in store table 'result', signatures
     in 'index'."""
-    stream = open_document_stream(spark, cfg, schema)
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(micro_batch_dedup(cfg, store))
-            .trigger(availableNow=True)
-            .start())
+    stream = read_arrivals(spark, cfg.source_dir, schema)
+    return start_available_now(
+        stream.writeStream.foreachBatch(micro_batch_dedup(cfg, store)),
+        checkpoint_dir)
 
 
 # ----------------------------------------------- driver-gated entity --
@@ -157,60 +149,30 @@ class StreamingDedupEntityConfig:
             n_batches=self.n_batches)
 
 
-def _stage_arrival_files(spark, docs: DataFrame,
-                         cfg: StreamingDedupEntityConfig, bound: int,
-                         src_dir: str) -> None:
-    """Write the corpus as n_batches single-file parquet arrivals with
-    strictly increasing mtimes, so the file stream (ordered by mtime,
-    then path — batch_<k> names also sort lexicographically) delivers
-    them as epochs 0..n-1 — ONE distributed job via
-    ``stage_epoch_frames`` (the driver never holds row data). Staging
-    exists only because the driver entity must simulate arrival; a
-    production stream watches a directory someone else fills."""
-    from .staging import EPOCH_COL, stage_epoch_frames
-
-    batch_of = F.expr(_batch_expr(cfg.as_batch(), bound, "spark"))
-    stage_epoch_frames(
-        docs.select(cfg.id_col, cfg.text_col)
-        .withColumn(EPOCH_COL, batch_of),
-        cfg.n_batches, src_dir)
-
-
 def build_streaming_incremental_dedup(spark, reg: Registry,
                                       cfg: StreamingDedupEntityConfig,
                                       g: GlobalConfig = DEFAULT
                                       ) -> DataFrame:
-    """Stage -> stream -> return the persisted verdicts. Scratch dirs
-    (arrival files, checkpoint, store) live in the shared process-
-    lifetime registry and are cleared per run, so repeated driver/bench
-    invocations re-execute the full streaming load instead of replaying
-    a stale checkpoint."""
-    import os
-    import shutil
-
+    """Stage the corpus as n_batches id-range arrivals -> stream ->
+    return the persisted verdicts."""
     docs = reg.load(spark, cfg.source)
     max_id = docs.agg(F.max(cfg.id_col)).collect()[0][0]
     if max_id is None:
         return docs.selectExpr(cfg.id_col, "CAST(true AS BOOLEAN) AS is_kept",
                                "CAST(0 AS INT) AS batch_id")
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_streamdedup")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    for p in (src_dir, ckpt_dir, store.path("result"), store.path("index")):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(src_dir)
+    batch_of = F.expr(_batch_expr(cfg.as_batch(), int(max_id) + 1, "spark"))
 
-    _stage_arrival_files(spark, docs, cfg, int(max_id) + 1, src_dir)
-    scfg = StreamingDedupConfig(
-        source_dir=src_dir, id_col=cfg.id_col, text_col=cfg.text_col,
-        shingle_n=cfg.shingle_n, num_perm=cfg.num_perm, bands=cfg.bands,
-        max_files_per_trigger=1)
-    schema = docs.select(cfg.id_col, cfg.text_col).schema
-    q = start_dedup_stream(spark, scfg, store, schema, ckpt_dir)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-    if q.exception() is not None:
-        raise q.exception()
+    def dedup(stream, store):
+        scfg = StreamingDedupConfig(
+            source_dir=store.path(ARRIVALS), id_col=cfg.id_col,
+            text_col=cfg.text_col, shingle_n=cfg.shingle_n,
+            num_perm=cfg.num_perm, bands=cfg.bands)
+        return stream.writeStream.foreachBatch(micro_batch_dedup(scfg, store))
+
+    store = run_arrivals(
+        spark, cfg.name,
+        docs.select(cfg.id_col, cfg.text_col).withColumn(EPOCH_COL, batch_of),
+        cfg.n_batches, dedup)
     return store.read("result")
 
 

@@ -32,6 +32,9 @@ from ..operators.nh import build_nh_sat, build_nh_link
 from ..operators.sat import build_sat_v0
 from ..operators.ma_sat import build_ma_sat_v0
 from ..plans.incremental import ParquetStore, anti_join_new
+from .staging import (_STREAM_SHUFFLE_DEFAULT, ARRIVALS, EPOCH_COL,
+                      read_arrivals, run_arrivals, start_available_now)
+from .stateful import _check_ts_stats, _ts_stats, _with_time_epoch
 
 
 @dataclass(frozen=True)
@@ -47,14 +50,6 @@ class StreamIngestConfig:
     nh_links: tuple = ()          # NhLinkConfig (pure anti-join inserts)
     sats: tuple = ()              # SatConfig (sat_v0, delta-historized)
     ma_sats: tuple = ()           # MaSatConfig (group-hashdiff historized)
-    max_files_per_trigger: int = 10
-
-
-def open_event_stream(spark, cfg: StreamIngestConfig, schema) -> DataFrame:
-    """File-source stream over an arriving-parquet directory."""
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-            .parquet(cfg.source_dir))
 
 
 def _require_whole_groups(new: DataFrame, target: DataFrame, cfg,
@@ -149,17 +144,13 @@ def micro_batch_loader(cfg: StreamIngestConfig, store: ParquetStore,
 
 
 def start_ingest(spark, cfg: StreamIngestConfig, store: ParquetStore,
-                 schema, checkpoint_dir: str, g: GlobalConfig = DEFAULT,
-                 available_now: bool = True):
-    """Start the streaming load; ``available_now=True`` drains the
-    directory and stops (test/backfill mode), False runs continuously."""
-    stream = open_event_stream(spark, cfg, schema)
-    writer = (stream.writeStream
-              .foreachBatch(micro_batch_loader(cfg, store, g))
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+                 schema, checkpoint_dir: str, g: GlobalConfig = DEFAULT):
+    """Start the streaming load over ``cfg.source_dir``; it drains the
+    files that have arrived and stops."""
+    stream = read_arrivals(spark, cfg.source_dir, schema)
+    return start_available_now(
+        stream.writeStream.foreachBatch(micro_batch_loader(cfg, store, g)),
+        checkpoint_dir)
 
 
 def windowed_event_counts(events: DataFrame, g: GlobalConfig = DEFAULT,
@@ -230,17 +221,10 @@ class StreamingVaultIngestEntityConfig:
 def build_streaming_vault_ingest(spark, reg: Registry,
                                  cfg: StreamingVaultIngestEntityConfig,
                                  g: GlobalConfig = DEFAULT) -> DataFrame:
-    """Stage -> stream the real vault load -> fold the store tables.
-    Scratch dirs are cleared per run so repeated driver/bench
-    invocations re-execute the full streaming load."""
-    import os
-    import shutil
+    """Stage -> stream the real vault load -> fold the store tables."""
     from functools import reduce
 
     from ..operators.bundle import _member_exprs
-    from ..plans.incremental import scratch_store
-    from .staging import stage_epoch_frames
-    from .stateful import _check_ts_stats, _ts_stats, _with_time_epoch
 
     ev = reg.load(spark, cfg.source).withColumn(
         cfg.ts_col, F.col(cfg.ts_col).cast("timestamp"))
@@ -250,25 +234,18 @@ def build_streaming_vault_ingest(spark, reg: Registry,
             [], "entity string, hk string, hd string, "
                 "ldts timestamp, rsrc string")
     _check_ts_stats(stats)
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_streamvault")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    tables = [e.name for e in (*cfg.hubs, *cfg.nh_sats)]
-    for p in (src_dir, ckpt_dir, *[store.path(t) for t in tables]):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(src_dir)
-    stage_epoch_frames(
-        _with_time_epoch(ev, stats, cfg.n_batches, ts_col=cfg.ts_col),
-        cfg.n_batches, src_dir)
 
-    ingest = StreamIngestConfig(
-        source_dir=src_dir, source_name=cfg.source, stage=cfg.stage,
-        hubs=cfg.hubs, nh_sats=cfg.nh_sats, max_files_per_trigger=1)
-    q = start_ingest(spark, ingest, store, ev.schema, ckpt_dir, g)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-    if q.exception() is not None:
-        raise q.exception()
+    def load(stream, store):
+        ingest = StreamIngestConfig(
+            source_dir=store.path(ARRIVALS), source_name=cfg.source,
+            stage=cfg.stage, hubs=cfg.hubs, nh_sats=cfg.nh_sats)
+        return stream.writeStream.foreachBatch(
+            micro_batch_loader(ingest, store, g))
+
+    store = run_arrivals(
+        spark, cfg.name,
+        _with_time_epoch(ev, stats, cfg.n_batches, ts_col=cfg.ts_col),
+        cfg.n_batches, load)
     parts = [store.read(m.entity).selectExpr(*_member_exprs(m, g))
              for m in cfg.members]
     return reduce(lambda a, b: a.unionByName(b), parts)
@@ -325,16 +302,7 @@ def build_streaming_hopping(spark, reg: Registry,
                             cfg: StreamingHoppingEntityConfig,
                             g: GlobalConfig = DEFAULT) -> DataFrame:
     """Stage -> native watermarked window aggregation (append mode) ->
-    read the flushed sink. Scratch dirs are cleared per run so repeated
-    driver/bench invocations re-execute the full streaming load."""
-    import os
-    import shutil
-
-    from ..plans.incremental import scratch_store
-    from .staging import (EPOCH_COL, scoped_stream_shuffle,
-                          stage_epoch_frames)
-    from .stateful import _check_ts_stats, _ts_stats, _with_time_epoch
-
+    read the flushed sink."""
     ev = (reg.load(spark, cfg.source)
           .select(F.col(cfg.ts_col).cast("timestamp").alias("ts"),
                   F.col(cfg.group_col).alias("gcol"),
@@ -346,46 +314,32 @@ def build_streaming_hopping(spark, reg: Registry,
     if stats.cnt == 0:
         return spark.createDataFrame([], out_schema)
     _check_ts_stats(stats)
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_streamhop")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    out_dir = store.path("windows")
-    for p in (src_dir, ckpt_dir, out_dir):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(src_dir)
     sentinel = spark.sql(
         f"SELECT TIMESTAMP '{cfg.sentinel_ts}' AS ts, "
         f"'__sentinel__' AS gcol, CAST(0 AS DOUBLE) AS value, "
         f"CAST({cfg.n_batches} AS INT) AS {EPOCH_COL}")
-    stage_epoch_frames(
-        _with_time_epoch(ev, stats, cfg.n_batches).unionByName(sentinel),
-        cfg.n_batches + 1, src_dir)
 
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir)
-              .withWatermark("ts", cfg.watermark))
-    agg = (stream.groupBy(
-               F.window("ts", f"{cfg.width_seconds} seconds",
-                        f"{cfg.hop_seconds} seconds").alias("w"),
-               "gcol")
-           .agg(F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
-                .alias("sum_value_cents"))
-           .select(F.col("w.start").alias("window_start"),
-                   F.col("w.end").alias("window_end"),
-                   F.col("gcol").alias(cfg.group_col),
-                   "n_events", "sum_value_cents"))
-    with scoped_stream_shuffle(spark):
-        q = (agg.writeStream.format("parquet")
-             .outputMode("append")
-             .option("path", out_dir)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-        if q.exception() is not None:
-            raise q.exception()
-    return (spark.read.parquet(out_dir)
+    def windows(stream, store):
+        agg = (stream.withWatermark("ts", cfg.watermark)
+               .groupBy(F.window("ts", f"{cfg.width_seconds} seconds",
+                                 f"{cfg.hop_seconds} seconds").alias("w"),
+                        "gcol")
+               .agg(F.count(F.lit(1)).alias("n_events"),
+                    F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+                    .alias("sum_value_cents"))
+               .select(F.col("w.start").alias("window_start"),
+                       F.col("w.end").alias("window_end"),
+                       F.col("gcol").alias(cfg.group_col),
+                       "n_events", "sum_value_cents"))
+        return (agg.writeStream.format("parquet").outputMode("append")
+                .option("path", store.path("windows")))
+
+    store = run_arrivals(
+        spark, cfg.name,
+        _with_time_epoch(ev, stats, cfg.n_batches).unionByName(sentinel),
+        cfg.n_batches + 1, windows,
+        state_partitions=_STREAM_SHUFFLE_DEFAULT)
+    return (spark.read.parquet(store.path("windows"))
             .filter(F.col("window_start")
                     < F.expr(f"TIMESTAMP '{cfg.sentinel_ts}' "
                              f"- INTERVAL {cfg.width_seconds} SECONDS")))

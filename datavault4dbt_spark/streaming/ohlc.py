@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from ..operators.events import (OhlcBarsConfig, _ohlc_input,
                                 ohlc_partial, ohlc_merge, ohlc_finalize)
 from ..plans.incremental import ParquetStore
+from .staging import (EPOCH_COL, read_arrivals, run_arrivals,
+                      start_available_now)
 
 _TABLE = "ohlc_partials"
 
@@ -55,16 +57,11 @@ def read_ohlc_bars(cfg: OhlcBarsConfig, store: ParquetStore,
 
 def start_ohlc_stream(spark, cfg: OhlcBarsConfig, store: ParquetStore,
                       source_dir: str, schema, checkpoint_dir: str,
-                      table: str = _TABLE,
-                      max_files_per_trigger: int = 1):
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(source_dir))
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(micro_batch_ohlc(cfg, store, table))
-            .trigger(availableNow=True)
-            .start())
+                      table: str = _TABLE):
+    stream = read_arrivals(spark, source_dir, schema)
+    return start_available_now(
+        stream.writeStream.foreachBatch(micro_batch_ohlc(cfg, store, table)),
+        checkpoint_dir)
 
 
 # ----------------------------------------------- driver-gated entity --
@@ -95,42 +92,24 @@ class OhlcStreamEntityConfig:
 
 def build_streaming_ohlc(spark, reg, cfg: OhlcStreamEntityConfig,
                          g=None):
-    import os
-    import shutil
-
-    from ..plans.incremental import scratch_store
-    from .staging import EPOCH_COL, stage_epoch_frames
-
     bars = cfg.bars()
     ev = (reg.load(spark, cfg.source)
           .select(bars.group_col,
                   F.col(bars.ts_col).cast("timestamp")
                   .alias(bars.ts_col),
                   bars.id_col, "value"))
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_streamohlc")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    for p in (src_dir, ckpt_dir, store.path(_TABLE)):
-        shutil.rmtree(p, ignore_errors=True)
     mx = ev.agg(F.max(bars.id_col)).collect()[0][0]
     if mx is None:
         empty = ohlc_finalize(
             ohlc_partial(_ohlc_input(ev, bars), bars), bars)
         return empty
-    os.makedirs(src_dir)
     bound = int(mx) + 1
     batch_of = F.expr(f"CAST(({bars.id_col} * {cfg.n_batches}) "
                       f"div {bound} AS INT)")
-    # one distributed staging job instead of n_batches sequential
-    # coalesce(1) writes (each rescanning the source) — staging.py
-    stage_epoch_frames(ev.withColumn(EPOCH_COL, batch_of),
-                       cfg.n_batches, src_dir)
-    q = start_ohlc_stream(spark, bars, store, src_dir, ev.schema,
-                          ckpt_dir)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-    if q.exception() is not None:
-        raise q.exception()
+    store = run_arrivals(
+        spark, cfg.name, ev.withColumn(EPOCH_COL, batch_of), cfg.n_batches,
+        lambda stream, store: stream.writeStream.foreachBatch(
+            micro_batch_ohlc(bars, store)))
     return read_ohlc_bars(bars, store)
 
 

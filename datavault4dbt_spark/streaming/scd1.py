@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 
 from ..operators.merge import Scd1MergeConfig, _versioned, merge_scd1_batch
 from ..plans.incremental import ParquetStore
+from .staging import (EPOCH_COL, read_arrivals, run_arrivals,
+                      start_available_now)
 
 
 def micro_batch_scd1(cfg: Scd1MergeConfig, store: ParquetStore,
@@ -50,19 +52,14 @@ def micro_batch_scd1(cfg: Scd1MergeConfig, store: ParquetStore,
 
 def start_scd1_stream(spark, cfg: Scd1MergeConfig, store: ParquetStore,
                       source_dir: str, schema, checkpoint_dir: str,
-                      table: str = "current",
-                      max_files_per_trigger: int = 1):
+                      table: str = "current"):
     """Wire a parquet file stream -> foreachBatch(upsert) and start it
     with an availableNow trigger. The current-state table lands in
     ``store``/``table``."""
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(source_dir))
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(micro_batch_scd1(cfg, store, table))
-            .trigger(availableNow=True)
-            .start())
+    stream = read_arrivals(spark, source_dir, schema)
+    return start_available_now(
+        stream.writeStream.foreachBatch(micro_batch_scd1(cfg, store, table)),
+        checkpoint_dir)
 
 
 # ----------------------------------------------- driver-gated entity --
@@ -78,13 +75,7 @@ def start_scd1_stream(spark, cfg: Scd1MergeConfig, store: ParquetStore,
 # Scd1MergeConfig: same knobs, same oracle, different executor.
 
 def build_streaming_scd1(spark, reg, cfg: Scd1MergeConfig, g=None):
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
-
-    from ..plans.incremental import scratch_store
-    from .staging import EPOCH_COL, stage_epoch_frames
 
     cols = list(dict.fromkeys(
         (*cfg.key_cols, *cfg.tie_cols, *cfg.payload_cols)))
@@ -95,33 +86,22 @@ def build_streaming_scd1(spark, reg, cfg: Scd1MergeConfig, g=None):
     if any(v is None for v in versions):
         raise ValueError(f"{cfg.name}: version_expr produced NULL")
     versions.sort()
-    store = scratch_store(spark, cfg.name, prefix="dv4dbt_scd1stream")
-    src_dir, ckpt_dir = store.path("__arrivals__"), store.path("__ckpt__")
-    for p in (src_dir, ckpt_dir, store.path("current")):
-        shutil.rmtree(p, ignore_errors=True)
     if not versions:
         return src.selectExpr(
             *cfg.key_cols,
             f"CAST(NULL AS BIGINT) AS {cfg.version_alias}",
             *cfg.tie_cols, *cfg.payload_cols)
-    os.makedirs(src_dir)
     # epoch = index of the row's version in ascending version order
     # (a CASE over the probed distinct versions — a handful of
-    # literals); one distributed staging job instead of one
-    # coalesce(1) write per version (staging.py)
+    # literals)
     epoch_case = ("CASE CAST(" + cfg.version_expr + " AS BIGINT) "
                   + " ".join(f"WHEN {v} THEN {i}"
                              for i, v in enumerate(versions))
                   + " END")
-    stage_epoch_frames(
-        src.withColumn(EPOCH_COL,
-                       F.expr(epoch_case).cast("int")),
-        len(versions), src_dir)
-    q = start_scd1_stream(spark, cfg, store, src_dir, src.schema,
-                          ckpt_dir)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(f"{cfg.name}: stream did not drain in 600s")
-    if q.exception() is not None:
-        raise q.exception()
+    store = run_arrivals(
+        spark, cfg.name,
+        src.withColumn(EPOCH_COL, F.expr(epoch_case).cast("int")),
+        len(versions),
+        lambda stream, store: stream.writeStream.foreachBatch(
+            micro_batch_scd1(cfg, store)))
     return store.read("current").select(*cfg.out_cols)

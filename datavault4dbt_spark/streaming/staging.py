@@ -1,4 +1,5 @@
-"""Arrival-file staging for the driver-gated streaming entities.
+"""Arrival staging and the one stream runner of the driver-gated
+streaming entities.
 
 A driver entity must SIMULATE arrival (a production stream watches a
 directory someone else fills): the input frame is written as K
@@ -6,9 +7,24 @@ single-file parquet arrivals with strictly increasing mtimes, so a
 file stream with maxFilesPerTrigger=1 delivers them as micro-batch
 epochs 0..K-1 in declared order. Each frame is written DISTRIBUTED to
 a sibling dir and its single output file renamed into the watched dir
-— the driver never holds row data. Shared by streaming/incdedup.py's
-shape, streaming/stateful.py (time-range batches + sentinel) and
-streaming/ohlc.py (id-range batches).
+— the driver never holds row data.
+
+Every stream the package starts goes through this module:
+
+- ``read_arrivals``: a parquet file stream over an arrival directory,
+  one file per trigger;
+- ``start_available_now``: checkpoint + availableNow trigger +
+  ``start()`` on an unstarted writer (the public ``start_*`` helpers
+  return its query);
+- ``run_arrivals``: a gate's whole lifecycle. It clears the gate's
+  scratch store, stages ``arrivals`` (the stream columns plus
+  ``EPOCH_COL``) in one job, reads them back as a stream, and starts
+  the writer ``query(stream, store)`` returns — under
+  ``scoped_stream_shuffle`` when ``state_partitions`` is given. It
+  waits up to 600 s (on timeout it stops the query and raises) and
+  returns the store for the read-back. A failed micro-batch surfaces
+  as ``StreamingQueryException`` from the wait; the query is then no
+  longer active and the shuffle scope is restored.
 """
 
 from __future__ import annotations
@@ -18,7 +34,9 @@ import os
 import shutil
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
+
+from ..plans.incremental import ParquetStore, scratch_store
 
 # Session conf key a deployment sets to size the streaming state/shuffle
 # layout explicitly (e.g. 2000 on a 1000-executor cluster); tests use it
@@ -61,7 +79,7 @@ _SCOPE_LOCK = threading.Lock()
 
 
 @contextmanager
-def scoped_stream_shuffle(spark, default: int = _STREAM_SHUFFLE_DEFAULT):
+def scoped_stream_shuffle(spark, default: int):
     """Scope ``spark.sql.shuffle.partitions`` to the streaming-query
     layout for the duration of a checkpointed execution, then restore.
 
@@ -87,31 +105,6 @@ def scoped_stream_shuffle(spark, default: int = _STREAM_SHUFFLE_DEFAULT):
             spark.conf.set(key, prev)
 
 
-def stage_arrival_frames(frames, src_dir: str) -> None:
-    """Write ``frames`` (same-schema DataFrames, already projected to
-    the stream's columns) as ordered single-file arrivals.
-
-    K sequential jobs (one coalesce(1) write per frame). Prefer
-    ``stage_epoch_frames`` when the frames are expressible as one
-    DataFrame with an epoch column — it stages every arrival in ONE
-    distributed job; this per-frame path remains for callers whose
-    frames have heterogeneous plans."""
-    base = time.time()
-    for k, frame in enumerate(frames):
-        tmp = f"{src_dir}.__stage{k}__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")
-        if len(part) != 1:
-            raise RuntimeError(f"expected one staged file, got {part}")
-        dst = f"{src_dir}/batch_{k}.parquet"
-        os.replace(part[0], dst)
-        # pin arrival order explicitly — equal mtimes would still order
-        # correctly by path, but the contract should not rest on names
-        os.utime(dst, (base + 100 * k, base + 100 * k))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 EPOCH_COL = "__epoch__"
 
 
@@ -125,14 +118,13 @@ def stage_epoch_frames(df, n_epochs: int, src_dir: str,
     ``partitionBy(epoch_col)`` — one parquet file per epoch, the epoch
     column stripped from the file contents by the hive layout — then
     each file is renamed into the watched dir in epoch order with
-    strictly increasing mtimes, exactly the layout
-    ``stage_arrival_frames`` produces.
+    strictly increasing mtimes.
 
-    Why: the sequential path pays K job floors plus K serial
-    single-task writes, each rescanning the source (guide §1.2, §2.4 —
-    staging was the gates' second-largest cost after the micro-batches
-    themselves); this is one scan + one K-task exchange. The driver
-    never holds row data.
+    Why: one coalesce(1) write per epoch pays K job floors plus K
+    serial single-task writes, each rescanning the source (guide §1.2,
+    §2.4 — staging was the gates' second-largest cost after the
+    micro-batches themselves); this is one scan + one K-task exchange.
+    The driver never holds row data.
 
     An epoch with no rows still gets an (empty, schema-only) arrival
     file via a fallback single-partition write, preserving the
@@ -165,3 +157,46 @@ def stage_epoch_frames(df, n_epochs: int, src_dir: str,
         os.utime(dst, (base + 100 * k, base + 100 * k))
     for leftover in glob.glob(f"{src_dir}.__stage*__"):
         shutil.rmtree(leftover, ignore_errors=True)
+
+
+ARRIVALS = "__arrivals__"
+CHECKPOINT = "__ckpt__"
+
+
+def read_arrivals(spark, src_dir: str, schema):
+    """Parquet file stream over ``src_dir``, one arrival file per
+    trigger, so each staged epoch is one micro-batch."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(src_dir))
+
+
+def start_available_now(writer, checkpoint_dir: str):
+    """Start an unstarted ``DataStreamWriter`` that drains what has
+    arrived and stops; returns the ``StreamingQuery``."""
+    return (writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
+def run_arrivals(spark, name: str, arrivals, n_epochs: int, query,
+                 state_partitions: int | None = None) -> ParquetStore:
+    """Stage ``arrivals`` as ``n_epochs`` arrival files, stream them
+    through the writer ``query(stream, store)`` builds, and drain it
+    (module docstring). Scratch state is cleared per run, so repeated
+    driver/bench invocations re-execute the full streaming load
+    instead of replaying a stale checkpoint."""
+    store = scratch_store(spark, name, prefix="dv4dbt_stream")
+    shutil.rmtree(store.root, ignore_errors=True)
+    src_dir = store.path(ARRIVALS)
+    os.makedirs(src_dir)
+    stage_epoch_frames(arrivals, n_epochs, src_dir)
+    stream = read_arrivals(spark, src_dir,
+                           arrivals.drop(EPOCH_COL).schema)
+    writer = query(stream, store)
+    scope = (scoped_stream_shuffle(spark, state_partitions)
+             if state_partitions else nullcontext())
+    with scope:
+        q = start_available_now(writer, store.path(CHECKPOINT))
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(f"{name}: stream did not drain in 600s")
+    return store

@@ -1,16 +1,19 @@
 """Focused pins for stage_epoch_frames (the r12 optimization that
 collapses per-gate sequential coalesce(1) staging writes into one
-distributed partitioned write): layout parity with stage_arrival_frames
-— one file per epoch named batch_<k>.parquet, strictly increasing
+distributed partitioned write): the arrival layout the file stream
+reads — one file per epoch named batch_<k>.parquet, strictly increasing
 mtimes, epoch column stripped — including the empty-epoch fallback the
-batch-id numbering contract relies on."""
+batch-id numbering contract relies on; and for run_arrivals, the one
+stream runner, on its failure path."""
 
 import glob
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from datavault4dbt_spark.streaming.staging import (EPOCH_COL,
+from datavault4dbt_spark.streaming.staging import (EPOCH_COL, run_arrivals,
                                                    stage_epoch_frames)
 
 
@@ -53,3 +56,24 @@ def test_empty_epoch_still_gets_schema_only_file(spark, tmp_path):
     assert empty.columns == ["id"] and empty.count() == 0
     assert spark.read.parquet(f"{src}/batch_0.parquet").count() == 5
     assert spark.read.parquet(f"{src}/batch_2.parquet").count() == 5
+
+
+def test_run_arrivals_failed_batch_raises_stops_and_restores(spark):
+    """A micro-batch that raises must surface from the runner as
+    StreamingQueryException, leave no active query behind, and restore
+    the session's shuffle layout after the state-partition scope."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    arrivals = (spark.range(6).selectExpr("id")
+                .withColumn(EPOCH_COL, (F.col("id") % 2).cast("int")))
+
+    def fail(_batch_df, _batch_id):
+        raise RuntimeError("micro-batch failed")
+
+    with pytest.raises(StreamingQueryException, match="micro-batch failed"):
+        run_arrivals(spark, "run_arrivals_failure", arrivals, 2,
+                     lambda stream, _store:
+                     stream.writeStream.foreachBatch(fail),
+                     state_partitions=3)
+    assert spark.streams.active == []
+    assert spark.conf.get(key) == prior

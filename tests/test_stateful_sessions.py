@@ -191,19 +191,30 @@ def test_stream_funnel_ignores_null_event_times(spark, tmp_path):
 def test_time_range_staging_rejects_null_ts(spark):
     """A NULL-ts row passes NO time-range filter, so it would silently
     vanish from the staged stream while the batch oracle still counts
-    its user — staging must fail loudly instead (r11 advice)."""
+    its user — staging must fail loudly instead (r11 advice). This is
+    the probe + tag path every time-range gate runs before staging."""
     import datetime
 
     import pytest as _pytest
 
-    from datavault4dbt_spark.streaming.stateful import _time_range_frames
+    from datavault4dbt_spark.streaming.staging import EPOCH_COL
+    from datavault4dbt_spark.streaming.stateful import (
+        _check_ts_stats, _ts_stats, _with_time_epoch)
 
     TS = datetime.datetime.fromisoformat
     ev = spark.createDataFrame(
-        [(1, TS("2024-01-01 10:00:00"), 1.0), (2, None, 2.0)],
+        [(1, TS("2024-01-01 10:00:00"), 1.0), (2, None, 2.0),
+         (3, TS("2024-01-01 12:00:00"), 3.0),
+         (4, TS("2024-01-02 09:00:00"), 4.0)],
         "user_id LONG, ts TIMESTAMP, value DOUBLE")
     with _pytest.raises(ValueError, match="NULL-ts"):
-        _time_range_frames(ev, 3)
-    # the clean frame still splits into contiguous covering ranges
-    frames = _time_range_frames(ev.filter("ts IS NOT NULL"), 3)
-    assert sum(f.count() for f in frames) == 1
+        _check_ts_stats(_ts_stats(ev))
+    # the clean rows are all tagged with a contiguous-range epoch
+    clean = ev.filter("ts IS NOT NULL")
+    stats = _ts_stats(clean)
+    _check_ts_stats(stats)
+    epochs = [r[0] for r in
+              _with_time_epoch(clean, stats, 3).select(EPOCH_COL).collect()]
+    assert len(epochs) == 3
+    assert all(e is not None and 0 <= e < 3 for e in epochs)
+    assert max(epochs) == 2     # the latest row lands in the last epoch

@@ -52,8 +52,7 @@ def _ingest_cfg():
         source_name="events",
         stage=fixtures.STAGES["stage_events"],
         hubs=(fixtures.HUBS["hub_user"],),
-        nh_sats=(fixtures.NH_SATS["nh_sat_user_event"],),
-        max_files_per_trigger=1)
+        nh_sats=(fixtures.NH_SATS["nh_sat_user_event"],))
 
 
 def test_stream_equals_batch(spark, sf_dir, event_batches, tmp_path):
@@ -63,8 +62,7 @@ def test_stream_equals_batch(spark, sf_dir, event_batches, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "vault"))
     schema = spark.read.parquet(event_batches).schema
 
-    q = start_ingest(spark, cfg, store, schema,
-                     str(tmp_path / "ckpt"), available_now=True)
+    q = start_ingest(spark, cfg, store, schema, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     # batch reference: the fixtures' registry (full-load semantics)
@@ -186,12 +184,11 @@ def test_streaming_sat_v0_equals_batch(spark, customer_version_batches,
     stage_cfg, sat_cfg = _cust_stream_cfgs()
     cfg = StreamIngestConfig(
         source_dir=customer_version_batches, source_name="cust_stream",
-        stage=stage_cfg, sats=(sat_cfg,), max_files_per_trigger=1)
+        stage=stage_cfg, sats=(sat_cfg,))
     store = ParquetStore(spark, str(tmp_path / "vault"))
     schema = spark.read.parquet(customer_version_batches).schema
 
-    q = start_ingest(spark, cfg, store, schema,
-                     str(tmp_path / "ckpt_sat"), available_now=True)
+    q = start_ingest(spark, cfg, store, schema, str(tmp_path / "ckpt_sat"))
     q.awaitTermination(300)
 
     # one-shot batch reference over the union of every arrived file
@@ -224,7 +221,7 @@ def test_streaming_sat_v0_replay_inserts_nothing(spark,
     fixtures.ensure_session_conf(spark)
     cfg = StreamIngestConfig(
         source_dir=customer_version_batches, source_name="cust_stream",
-        stage=stage_cfg, sats=(sat_cfg,), max_files_per_trigger=1)
+        stage=stage_cfg, sats=(sat_cfg,))
     store = ParquetStore(spark, str(tmp_path / "vault"))
     loader = micro_batch_loader(cfg, store)
     b0 = spark.read.parquet(f"{customer_version_batches}/batch_0.parquet")
@@ -311,13 +308,11 @@ def test_streaming_link_equals_batch(spark, event_batches, tmp_path):
     stage_cfg, link_cfg, nhl_cfg = _link_stream_cfgs()
     cfg = StreamIngestConfig(
         source_dir=event_batches, source_name="events",
-        stage=stage_cfg, links=(link_cfg,), nh_links=(nhl_cfg,),
-        max_files_per_trigger=1)
+        stage=stage_cfg, links=(link_cfg,), nh_links=(nhl_cfg,))
     store = ParquetStore(spark, str(tmp_path / "vault"))
     schema = spark.read.parquet(event_batches).schema
 
-    q = start_ingest(spark, cfg, store, schema,
-                     str(tmp_path / "ckpt_link"), available_now=True)
+    q = start_ingest(spark, cfg, store, schema, str(tmp_path / "ckpt_link"))
     q.awaitTermination(300)
 
     reg = Registry()
@@ -371,13 +366,11 @@ def test_streaming_ma_sat_equals_batch(spark, sf_dir, order_version_batches,
     ma_cfg = fixtures.MA_SATS["ma_sat_customer_orders"]
     cfg = StreamIngestConfig(
         source_dir=order_version_batches, source_name="orders",
-        stage=fixtures.STAGES["stage_orders"], ma_sats=(ma_cfg,),
-        max_files_per_trigger=1)
+        stage=fixtures.STAGES["stage_orders"], ma_sats=(ma_cfg,))
     store = ParquetStore(spark, str(tmp_path / "vault"))
     schema = spark.read.parquet(order_version_batches).schema
 
-    q = start_ingest(spark, cfg, store, schema,
-                     str(tmp_path / "ckpt_ma"), available_now=True)
+    q = start_ingest(spark, cfg, store, schema, str(tmp_path / "ckpt_ma"))
     q.awaitTermination(300)
 
     reg = fixtures.registry(spark, sf_dir)

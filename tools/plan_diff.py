@@ -2,6 +2,8 @@
 the parts of ``explain("formatted")`` text that change from run to run.
 
 Usage:
+    python tools/qbench.py --all-explain A_DIR     # e.g. on the parent
+    python tools/qbench.py --all-explain B_DIR     # on the change
     python tools/plan_diff.py [--diff] A_DIR B_DIR
 
 Normalized before comparing:

@@ -5,9 +5,14 @@ Times individual declared entities with bench.py's exact methodology
 captures ``explain("formatted")`` into plans/<tag>/<name>_<suffix>.txt
 so plan claims in OPTIMIZATION_r*.md are reproducible artifacts.
 
+``--all-explain DIR`` only dumps plans, without timing: one
+``DIR/<name>_plan.txt`` per named entity, or per declared entity (all
+of them, bundle members included) when no names are given. Point DIR
+outside the checkout; ``tools/plan_diff.py`` compares two such DIRs.
+
 Usage:
     python tools/qbench.py [--trials N] [--explain TAG:SUFFIX] name...
-    python tools/qbench.py --all-explain TAG:SUFFIX   # plans only, no timing
+    python tools/qbench.py --all-explain DIR [name...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
@@ -30,6 +35,7 @@ def main():
     args = sys.argv[1:]
     trials = 3
     explain_spec = None
+    plan_dir = None
     explain_only = False
     names = []
     i = 0
@@ -40,7 +46,7 @@ def main():
         elif a == "--explain":
             explain_spec = args[i + 1]; i += 2
         elif a == "--all-explain":
-            explain_spec = args[i + 1]; explain_only = True; i += 2
+            plan_dir = args[i + 1]; explain_only = True; i += 2
         else:
             names.append(a); i += 1
 
@@ -48,17 +54,17 @@ def main():
     from datavault4dbt_spark import fixtures
 
     if explain_only and not names:
-        names = fixtures.all_entity_names()
+        names = fixtures.declared_entity_names()
 
     spark = build_session()
     warmup(spark, sf_dir)
 
-    plan_dir = None
     suffix = "plan"
     if explain_spec:
         tag, _, suffix = explain_spec.partition(":")
         suffix = suffix or "plan"
         plan_dir = os.path.join(REPO, "plans", tag)
+    if plan_dir:
         os.makedirs(plan_dir, exist_ok=True)
 
     timings = {}
