@@ -384,11 +384,22 @@ def testdata_registry(sf_dir: str) -> Registry:
     return reg
 
 
-# Session options the engine relies on: UTC session time, AQE, and
-# parquet TIMESTAMP(NANOS) read as LONG (events.ts).
+# Session options the engine relies on: UTC session time, AQE,
+# parquet TIMESTAMP(NANOS) read as LONG (events.ts), and a codegen
+# cache sized to the engine's working set.
 SESSION_CONFS = (("spark.sql.session.timeZone", "UTC"),
                  ("spark.sql.adaptive.enabled", "true"),
-                 ("spark.sql.legacy.parquet.nanosAsLong", "true"))
+                 ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+                 # Spark's default 100-entry cache of generated classes
+                 # is smaller than one daily vault pass's ~220, so every
+                 # pass evicted and recompiled them (~22 ms each).
+                 # Witness (CodegenMetrics compile count per pass,
+                 # perfbench vault_daily_delta, seed 1, 4 cores): from
+                 # day 2 on a delta pass compiles 10-14 classes instead
+                 # of 218-222, a no-op pass 0 instead of 21-33. A
+                 # static conf: it holds only on a session built
+                 # through configure_session_builder.
+                 ("spark.sql.codegen.cache.maxEntries", "1000"))
 
 
 def configure_session_builder(builder):

@@ -2730,13 +2730,13 @@ def _index():
 
 
 def ensure_session_conf(spark):
-    """Set the engine's SESSION_CONFS at runtime (the driver may hand us
-    a session built without them)."""
+    """Set the engine's runtime SESSION_CONFS on a live session (a
+    caller of ``entry()`` may pass one built without them). Static entries
+    (the codegen cache size) are fixed when the session is built and
+    are skipped here; any error setting a runtime conf raises."""
     for k, v in SESSION_CONFS:
-        try:
+        if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
-        except Exception:
-            pass
 
 
 def registry(spark, sf_dir: str) -> Registry:

@@ -22,15 +22,18 @@ Check semantics (dbt generic-test parity):
   md5 can never emit, so NULL tuples count identically in both
   engines;
 - ``relationship``: child rows whose (non-NULL, like dbt's
-  relationships test) foreign key has no parent — a left-anti count
-  against the distinct parent keys.
+  relationships test) foreign key has no parent — the child rows of
+  the key groups no parent row shares.
 
-Scale: every check is one aggregation; the report unions them into a
-single plan whose branches the scheduler runs in parallel (the bundle
-pattern). unique/unique_combination shuffle on the checked tuple
-(uniform hashkeys); relationship anti-joins broadcast the parent key
-set when small, else hash-join on the key. Nothing collects beyond the
-per-check counts themselves.
+Scale: the whole suite is one aggregation. Each checked entity is
+scanned once, whatever the number of checks that read it (as subject
+or as relationship parent): a ``stack()`` emits one ``(check id, key,
+counted, parent)`` row per check that reads the row, one
+``groupBy(check id, key)`` — a single shuffle, with partial
+aggregation collapsing the not_null rows map-side — counts every
+key group, and one global aggregate sums the groups per check. No
+join, no per-check branch; nothing collects beyond the per-check
+counts themselves.
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 from ..context import GlobalConfig, DEFAULT, Registry, ensure_identifier
 from ..plans.sqlbuild import SqlBuilder
@@ -88,81 +92,96 @@ class VaultChecksConfig:
             raise ValueError(f"{self.name}: needs >= 1 check")
 
 
-def _label(c: Check):
-    cols = ",".join(c.columns)
-    return (F.lit(c.entity).alias("entity"),
-            F.lit(c.kind).alias("check_kind"),
-            F.lit(cols).alias("check_cols"))
+def _tuple_sql(exprs) -> str:
+    """A tuple of column expressions as ONE string key — identical text
+    shape to the oracle's (vault_checks_oracle below).
+
+    INJECTIVE: each component is md5-hashed (fixed 32-hex width) before
+    joining, so values containing any separator/sentinel byte cannot
+    make distinct tuples collide (round-7 advice); NULL components fold
+    to a sentinel md5 can never emit. The oracle runs the same
+    expression, so both engines count identical distinct tuples
+    (including all-NULL ones, which countDistinct alone would skip)."""
+    return "concat_ws(':', " + ", ".join(
+        f"coalesce(md5(CAST({e} AS STRING)), 'null')" for e in exprs) + ")"
 
 
-def _agg_metric_sql(c: Check) -> str:
-    """The check's violation count as ONE SQL aggregate expression —
-    identical text shape to the oracle's (vault_checks_oracle below)."""
-    if c.kind == "not_null":
-        pred = " OR ".join(f"{col} IS NULL" for col in c.columns)
-        return f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END)"
-    # INJECTIVE tuple encoding: each component is md5-hashed (fixed
-    # 32-hex width) before joining, so values containing any
-    # separator/sentinel byte cannot make distinct tuples collide
-    # (round-7 advice); NULL components fold to a sentinel md5 can
-    # never emit. The oracle runs the same expression, so both engines
-    # count identical distinct tuples (including all-NULL ones, which
-    # countDistinct alone would skip).
-    tup = ", ".join(f"coalesce(md5(CAST({col} AS STRING)), 'null')"
-                    for col in c.columns)
-    return f"count(*) - count(DISTINCT concat_ws(':', {tup}))"
+def _parent_key_exprs(c: Check, child: DataFrame,
+                      parent: DataFrame) -> list:
+    """The parent's key columns as the child's key renders them: a key
+    pair of different types compares by value (``child.fk = parent.pk``
+    under Spark's coercion), so a parent column is cast to the child's
+    type unless both are integral (whose string forms already agree)."""
+    ct = {f.name.lower(): f.dataType for f in child.schema.fields}
+    pt = {f.name.lower(): f.dataType for f in parent.schema.fields}
+    out = []
+    for k, p in zip(c.columns, c.parent_cols):
+        a, b = ct[k.lower()], pt[p.lower()]
+        if a == b or (isinstance(a, IntegralType)
+                      and isinstance(b, IntegralType)):
+            out.append(p)
+        else:
+            out.append(f"CAST({p} AS {a.simpleString()})")
+    return out
 
 
 def build_vault_checks(spark, reg: Registry, cfg: VaultChecksConfig,
                        g: GlobalConfig = DEFAULT) -> DataFrame:
-    # Aggregate-kind checks (not_null / unique / unique_combination) on
-    # the SAME entity share one scan: each branch of the final union
-    # recomputes its entity's whole build subtree (persisting the
-    # checked entities was measured-and-rejected in r12 — the cache
-    # build cost more than the duplicate aggregates), so fusing N
-    # same-entity aggregates into one agg + stack() halves that
-    # entity's builds in the plan. Row content is unchanged (same
-    # label/count per check); row order within the union differs only
-    # when same-entity agg checks were declared non-adjacent, and the
-    # driver compare is order-insensitive.
-    groups: dict = {}   # entity -> [check, ...] in declared order
-    order: list = []    # (entity, first_check) in declared order
+    # One key-count per check. Every entity a check reads emits, per
+    # row, (cid, k, c, p): the check's id, a key, whether the row counts
+    # toward the check (c) and whether it is a relationship parent row
+    # (p). Per (cid, k) group, n = sum(c) and np = sum(p) give:
+    #   not_null      k NULL, c = the row has a NULL     -> n
+    #   unique(_comb) k = the tuple, c = 1               -> n - 1
+    #   relationship  child: k = the fk tuple, c = every fk non-NULL;
+    #                 parent: k = the key tuple, p = 1   -> n if np = 0
+    # so each entity is scanned (and its build subtree planned) once,
+    # however many checks read it; the old per-check union rebuilt an
+    # entity once per branch.
+    rows: dict = {}     # entity -> [stack row, ...], first-read order
+    sums = []           # per check: its violations over the groups
+    frames = {}
     for c in cfg.checks:
-        if c.kind == "relationship":
-            order.append((None, c))
+        for e in (c.entity, c.to_entity):
+            if e and e not in frames:
+                frames[e] = reg.load(spark, e)
+    for i, c in enumerate(cfg.checks):
+        subject = rows.setdefault(c.entity, [])
+        if c.kind == "not_null":
+            pred = " OR ".join(f"{col} IS NULL" for col in c.columns)
+            subject.append(f"{i}, CAST(NULL AS STRING), "
+                           f"CASE WHEN {pred} THEN 1 ELSE 0 END, 0")
+            sums.append(f"sum(CASE WHEN cid = {i} THEN n END)")
+        elif c.kind == "relationship":
+            # like dbt's relationships test, a NULL fk is never orphaned
+            nn = " AND ".join(f"{col} IS NOT NULL" for col in c.columns)
+            subject.append(f"{i}, {_tuple_sql(c.columns)}, "
+                           f"CASE WHEN {nn} THEN 1 ELSE 0 END, 0")
+            pkeys = _parent_key_exprs(c, frames[c.entity],
+                                      frames[c.to_entity])
+            rows.setdefault(c.to_entity, []).append(
+                f"{i}, {_tuple_sql(pkeys)}, 0, 1")
+            sums.append(f"sum(CASE WHEN cid = {i} AND np = 0 THEN n END)")
         else:
-            if c.entity not in groups:
-                order.append((c.entity, c))
-            groups.setdefault(c.entity, []).append(c)
-    parts = []
-    for entity, c0 in order:
-        if entity is None:   # relationship: anti-join count
-            c = c0
-            df = reg.load(spark, c.entity)
-            child = df.selectExpr(*c.columns).na.drop("any")
-            parent = (reg.load(spark, c.to_entity)
-                      .selectExpr(*[f"{p} AS {k}" for k, p in
-                                    zip(c.columns, c.parent_cols)])
-                      .distinct())
-            agg = (child.join(parent, on=list(c.columns), how="left_anti")
-                   .agg(F.count(F.lit(1)).alias("n")))
-            parts.append(agg.select(
-                *_label(c), F.coalesce(F.col("n"), F.lit(0))
-                .cast("long").alias("n_violations")))
-            continue
-        checks = groups[entity]
-        df = reg.load(spark, entity)
-        agg = df.selectExpr(
-            *[f"{_agg_metric_sql(c)} AS n{i}"
-              for i, c in enumerate(checks)])
-        rows = ", ".join(
-            f"'{c.entity}', '{c.kind}', '{','.join(c.columns)}', "
-            f"CAST(coalesce(n{i}, 0) AS BIGINT)"
-            for i, c in enumerate(checks))
-        parts.append(agg.selectExpr(
-            f"stack({len(checks)}, {rows}) AS "
-            f"(entity, check_kind, check_cols, n_violations)"))
-    return reduce(lambda a, b: a.unionByName(b), parts)
+            subject.append(f"{i}, {_tuple_sql(c.columns)}, 1, 0")
+            sums.append(f"sum(CASE WHEN cid = {i} THEN n - 1 END)")
+    keyed = reduce(DataFrame.unionAll, [
+        frames[e].selectExpr(f"stack({len(r)}, {', '.join(r)}) "
+                             f"AS (cid, k, c, p)")
+        for e, r in rows.items()])
+    groups = keyed.groupBy("cid", "k").agg(F.sum("c").alias("n"),
+                                           F.sum("p").alias("np"))
+    # a global aggregate returns its one row on empty input too, so a
+    # check no row reached still reports 0
+    totals = groups.selectExpr(*[f"{s} AS v{i}"
+                                 for i, s in enumerate(sums)])
+    labels = ", ".join(
+        f"'{c.entity}', '{c.kind}', '{','.join(c.columns)}', "
+        f"CAST(coalesce(v{i}, 0) AS BIGINT)"
+        for i, c in enumerate(cfg.checks))
+    return totals.selectExpr(
+        f"stack({len(cfg.checks)}, {labels}) AS "
+        f"(entity, check_kind, check_cols, n_violations)")
 
 
 def vault_checks_oracle(b: SqlBuilder, reg: Registry,

@@ -13,16 +13,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
+    from datavault4dbt_spark.context import configure_session_builder
 
-    s = (SparkSession.builder.master("local[8]")
-         .appName("dv4dbt-spark-tests")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "4g")
-         .getOrCreate())
+    # the engine's SESSION_CONFS (static ones included), plus the
+    # suite's local layout
+    s = configure_session_builder(
+        SparkSession.builder.master("local[8]")
+        .appName("dv4dbt-spark-tests")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "4g")).getOrCreate()
     yield s
     s.stop()
 

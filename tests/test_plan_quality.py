@@ -1086,3 +1086,34 @@ def test_wav_entities_are_shuffle_free_arrow_scans(spark, sf_dir):
         m = re.search(r"ReadSchema: struct<([^>]*)>", fmt)
         assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
             == {"doc_id", "text"}, (name, fmt)
+
+
+def test_vault_checks_is_one_keyed_aggregation(spark, tmp_path):
+    """The example project's vault_checks suite over stored tables: each
+    checked entity is scanned once (hub_customer is a check subject
+    AND both relationships' parent), and the six checks are ONE
+    Exchange keyed on (check id, key) feeding the per-check sum — no
+    join, no per-check branch."""
+    from datavault4dbt_spark.operators.checks import build_vault_checks
+    from datavault4dbt_spark.plans.project import load_project
+
+    cfg = load_project("examples/project")["vault_checks"].cfg
+    reg = Registry()
+    tables = {"hub_customer": "hk_customer_h string",
+              "link_customer_nation":
+                  "hk_customer_nation_l string, hk_customer_h string",
+              "sat_customer_n0_s": "hk_customer_h string, ldts timestamp"}
+    assert {c.entity for c in cfg.checks} | \
+        {c.to_entity for c in cfg.checks if c.to_entity} == set(tables)
+    for name, schema in tables.items():
+        path = str(tmp_path / name)
+        spark.createDataFrame([], schema).write.parquet(path)
+        reg.register_parquet(name, path)
+    plan = _plan(build_vault_checks(spark, reg, cfg, DEFAULT))
+    assert plan.count("FileScan parquet") == len(tables), plan
+    keyed = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert len(keyed) == 1, plan
+    assert re.fullmatch(r"cid#\d+, k#\d+, \d+", keyed[0]), plan
+    assert plan.count("Exchange") == 2, plan     # + SinglePartition sum
+    assert "SinglePartition" in plan, plan
+    assert "Join" not in plan, plan
